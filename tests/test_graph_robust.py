@@ -302,3 +302,20 @@ def test_burst_detect_above_mean(spark, sf_smoke):
     for r in ts_burst_detect(spark, sf_smoke).collect():
         assert r.zscore > 3.0 - 1e-6
         assert r.n_events > r.mean_events
+
+
+def test_kcore_result_keeps_pinned_width(spark, sf_smoke):
+    """graph_kcore's final degree aggregate and sort belong to the pinned
+    loop width: a result planned after the pin exits would shuffle at
+    whatever width the session has when the caller acts on it."""
+    import re
+
+    from un_datapipeline_spark.operators.graph_stats import graph_kcore
+    from un_datapipeline_spark.session import scoped_confs
+
+    sentinel = 37
+    with scoped_confs(spark, {"spark.sql.shuffle.partitions": sentinel}):
+        df = graph_kcore(spark, sf_smoke)
+        assert df.collect(), "sf0.001 k-core must be non-empty"
+        plan = df._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(rf"partitioning\(.*, {sentinel}\)", plan), plan

@@ -557,13 +557,13 @@ def test_lttb_shape_invariants(spark, sf_t2):
     assert xs, "daily grid empty"
 
 
-def test_connected_components_paths_agree(spark, sf_smoke, monkeypatch):
+def test_connected_components_paths_agree(spark, sf_smoke):
     """The size-gated union-find (small graphs) and the iterative
     min-label propagation (unbounded graphs) must return IDENTICAL
     (node, label) maps — the min-label fixpoint is unique, so this
     pins both implementations to it.  Forcing the threshold to 0 via
-    SPARK_GRAFT_CC_LOCAL_EDGES exercises the distributed loop on the
-    same edges the small path handles by default."""
+    ``local_edges=0`` exercises the distributed loop on the same edges
+    the small path handles by default."""
     from un_datapipeline_spark.operators.advanced import (
         _dup_edges,
         connected_components,
@@ -572,8 +572,9 @@ def test_connected_components_paths_agree(spark, sf_smoke, monkeypatch):
     d = load_table(spark, sf_smoke, "documents")
     edges = _dup_edges(d).localCheckpoint()
     small = {r.node: r.label for r in connected_components(edges).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_EDGES", "0")
-    big = {r.node: r.label for r in connected_components(edges).collect()}
+    big = {
+        r.node: r.label for r in connected_components(edges, local_edges=0).collect()
+    }
     assert small == big
     assert small, "sf0.001 dup graph must be non-empty"
 

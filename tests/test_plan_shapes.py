@@ -127,27 +127,13 @@ def test_runtime_bloom_filter_injected(spark, sf_smoke):
     """join_runtime_bloom's docstring contract: under the runtime-filter
     confs it sets, Catalyst must inject a bloom_filter_agg on the
     selective build side and a might_contain probe-side filter.  The
-    registered op freezes its result via eager localCheckpoint (so the
+    registered op freezes its result via an eager checkpoint (so the
     returned plan is a cache scan); this test rebuilds the same join
     under the same confs and inspects the pre-checkpoint plan."""
-    conf = spark.conf
-    saved = {
-        k: conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        )
-    }
-    try:
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-        conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "0",
-        )
+    from un_datapipeline_spark.operators.joins import RUNTIME_BLOOM_CONFS
+    from un_datapipeline_spark.session import scoped_confs
+
+    with scoped_confs(spark, RUNTIME_BLOOM_CONFS):
         li = load_table(spark, sf_smoke, "lineitem").select("l_orderkey", "l_returnflag")
         o = (
             load_table(spark, sf_smoke, "orders")
@@ -158,12 +144,6 @@ def test_runtime_bloom_filter_injected(spark, sf_smoke):
         opt = j._jdf.queryExecution().optimizedPlan().toString().lower()
         assert "bloom_filter_agg" in opt, "runtime bloom filter not injected"
         assert "might_contain" in opt, "probe side missing might_contain"
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
     # and the registered op still returns the frozen, conf-independent rows
     rows = OPS["join_runtime_bloom"].fn(spark, sf_smoke).collect()
     assert len(rows) == 3

@@ -1,4 +1,6 @@
-"""Unit tests for session.ensure_runtime_confs' cannot-modify guard.
+"""Unit tests for session.py: ensure_runtime_confs' cannot-modify
+guard, the scoped conf / pinned width helpers, and graft_checkpoint's
+warnings.
 
 ADVICE r07 (session.py): the guard must recognize the structured error
 class (getErrorClass / getCondition) FIRST — a reworded or localized
@@ -6,11 +8,17 @@ engine message must not crash table loaders — with the message-substring
 check kept as the fallback for wrappers that expose no error class
 (Py4J static-conf errors, older Connect builds).
 
-No SparkSession needed: we drive ensure_runtime_confs with a fake conf
-object that raises controlled exceptions.
+No SparkSession needed (except the durability gate test): we drive the
+helpers with fake conf / context objects.
 """
 
 from __future__ import annotations
+
+import logging
+import os
+import re
+from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -114,7 +122,7 @@ def test_no_error_sets_every_conf():
     assert dict(spark.conf.set_calls) == sess_mod.RUNTIME_CONFS
 
 
-def test_graft_checkpoint_durability_gate(spark, tmp_path, monkeypatch):
+def test_graft_checkpoint_durability_gate(spark, tmp_path, monkeypatch, caplog):
     """Round-13 (VERDICT r12 items 3/7): graft_checkpoint/ckpt default to
     localCheckpoint (no behavior change locally, nothing written to any
     checkpoint dir) and switch to a RELIABLE Dataset.checkpoint against
@@ -134,3 +142,110 @@ def test_graft_checkpoint_durability_gate(spark, tmp_path, monkeypatch):
     assert sorted(map(tuple, durable.collect())) == [(i, 2 * i) for i in range(100)]
     written = [p for p in target.rglob("*") if p.is_file()]
     assert written, "reliable checkpoint dir must contain materialized blocks"
+    # the context now checkpoints into the env dir: no mismatch warning
+    with caplog.at_level(logging.WARNING, logger="un_datapipeline_spark"):
+        df.transform(ckpt())
+    assert not caplog.records, caplog.text
+
+
+class _DictConf:
+    def __init__(self, vals):
+        self.vals = dict(vals)
+
+    def get(self, k, default=None):
+        return self.vals.get(k, default)
+
+    def set(self, k, v):
+        self.vals[k] = v
+
+    def unset(self, k):
+        self.vals.pop(k, None)
+
+
+def _conf_spark(vals=(), parallelism=4):
+    return SimpleNamespace(
+        conf=_DictConf(vals),
+        sparkContext=SimpleNamespace(defaultParallelism=parallelism),
+    )
+
+
+def test_scoped_confs_restores_set_and_unsets_absent():
+    spark = _conf_spark({"a": "1"})
+    with sess_mod.scoped_confs(spark, {"a": "2", "b": 3}):
+        assert spark.conf.vals == {"a": "2", "b": "3"}
+    assert spark.conf.vals == {"a": "1"}
+
+
+def test_scoped_confs_restores_on_exception():
+    spark = _conf_spark({"a": "1"})
+    with pytest.raises(ValueError):
+        with sess_mod.scoped_confs(spark, {"a": "2", "b": "3"}):
+            raise ValueError("body failed")
+    assert spark.conf.vals == {"a": "1"}
+
+
+@pytest.mark.parametrize(
+    "parallelism, loop, stream", [(4, "8", "4"), (64, "64", "64")]
+)
+def test_pinned_width_follows_default_parallelism(parallelism, loop, stream):
+    key = "spark.sql.shuffle.partitions"
+    spark = _conf_spark({key: "200"}, parallelism)
+    with sess_mod.pinned_shuffle_width(spark):
+        assert spark.conf.get(key) == loop
+    with sess_mod.pinned_shuffle_width(spark, stream=True):
+        assert spark.conf.get(key) == stream
+    assert spark.conf.get(key) == "200"
+
+
+def test_operators_route_confs_and_checkpoints_through_session():
+    """One save/restore path (scoped_confs / pinned_shuffle_width) and
+    one materialization path (ckpt) for every operator."""
+    banned = re.compile(
+        r"\.localCheckpoint\(|conf\.set\(|conf\.unset\(|SPARK_GRAFT_\w*_PARTITIONS"
+    )
+    ops = Path(sess_mod.__file__).parent / "operators"
+    hits = [
+        f"{p.name}:{n}: {line.strip()}"
+        for p in sorted(ops.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if banned.search(line)
+    ]
+    assert not hits, hits
+
+
+class _FakeContext:
+    def __init__(self, current=None):
+        self.current = current
+
+    def getCheckpointDir(self):
+        return self.current
+
+    def setCheckpointDir(self, d):
+        # Spark qualifies the dir and appends a per-context UUID
+        self.current = f"file:{os.path.abspath(d)}/0c7e4d52-uuid"
+
+
+class _FakeFrame:
+    def __init__(self, sc):
+        self.sparkSession = SimpleNamespace(sparkContext=sc)
+
+    def checkpoint(self, eager=True):
+        return self
+
+
+def test_graft_checkpoint_warns_instead_of_ignoring(tmp_path, monkeypatch, caplog):
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "durable"))
+    sc = _FakeContext()
+    caplog.set_level(logging.WARNING, logger="un_datapipeline_spark")
+
+    sess_mod.graft_checkpoint(_FakeFrame(sc))
+    assert not caplog.records, caplog.text  # dir taken, nothing dropped
+
+    sess_mod.graft_checkpoint(_FakeFrame(sc), storage_level="DISK_ONLY")
+    assert [r.name for r in caplog.records] == ["un_datapipeline_spark"]
+    assert "storage_level=DISK_ONLY dropped" in caplog.text
+    caplog.clear()
+
+    sess_mod.graft_checkpoint(_FakeFrame(_FakeContext("hdfs://nn/other/0c7e")))
+    assert [r.name for r in caplog.records] == ["un_datapipeline_spark"]
+    assert "ignored" in caplog.text and "hdfs://nn/other/0c7e" in caplog.text

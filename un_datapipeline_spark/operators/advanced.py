@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.operators.dedup_extras import trigram_array
+from un_datapipeline_spark.session import ckpt, pinned_shuffle_width
 from un_datapipeline_spark.tables import (
     capped_text_sql,
     cents_sum,
@@ -513,32 +514,28 @@ def _dup_edges(d: DataFrame) -> DataFrame:
     return jedges.union(medges).distinct()
 
 
-def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
+def connected_components(
+    edges: DataFrame, max_rounds: int = 20, local_edges: int = 200_000
+) -> DataFrame:
     """(node, label) with label = min node id in the component, by
     iterative min-label propagation over undirected edges (a, b).
 
-    Shuffle partitions are pinned small for the loop: the edge graph is
-    a tiny fraction of the corpus (only docs with a dup candidate), and
-    every iteration pays per-partition task overhead × rounds — 200
-    near-empty tasks per round dominated the runtime at test scale
-    (15 s → 3 s).  On a cluster, size SPARK_GRAFT_CC_PARTITIONS to the
-    edge count, not the corpus."""
-    import os
-
+    The loop runs under ``session.pinned_shuffle_width``: the edge graph
+    is a tiny fraction of the corpus (only docs with a dup candidate),
+    and 200 near-empty tasks per round dominated the runtime at test
+    scale (15 s → 3 s).  Graphs of at most ``local_edges`` edges take
+    the driver-side union-find path below."""
     spark = edges.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    before = spark.conf.get(key)
-    spark.conf.set(key, os.environ.get("SPARK_GRAFT_CC_PARTITIONS", "8"))
-    try:
+    with pinned_shuffle_width(spark):
         # Materialize the edge list ONCE before mirroring: the union has
         # two branches over the same (expensive — n-gram shuffle) edge
         # plan, and without this checkpoint the materialization of
         # `bidir` executes that plan twice (measured ~2× the edge-build
         # cost at sf0.1).
-        edges = edges.localCheckpoint()
+        edges = edges.transform(ckpt())
         bidir = edges.union(
             edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).localCheckpoint()
+        ).transform(ckpt())
 
         # Size-gated small path: dup-edge graphs are a tiny fraction of the
         # corpus (only docs with a candidate pair — 256 edges for 60k docs
@@ -549,8 +546,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
         # and the min-label fixpoint is unique, so both paths return
         # bit-identical labels.  Above it, the iterative key-partitioned
         # propagation below is the path that scales to any graph.
-        threshold = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_EDGES", "200000"))
-        if bidir.count() <= 2 * threshold:
+        if bidir.count() <= 2 * local_edges:
             parent: dict = {}
 
             def find(x):
@@ -586,7 +582,7 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
         labels = (
             bidir.select(F.col("a").alias("node")).distinct()
             .withColumn("label", F.col("node"))
-            .localCheckpoint()
+            .transform(ckpt())
         )
         prev_sum = None
         for _ in range(max_rounds):
@@ -597,15 +593,13 @@ def connected_components(edges: DataFrame, max_rounds: int = 20) -> DataFrame:
                 labels.union(prop)
                 .groupBy("node")
                 .agg(F.min("label").alias("label"))
-                .localCheckpoint()
+                .transform(ckpt())
             )
             cur_sum = labels.agg(F.sum("label")).collect()[0][0]
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
         return labels
-    finally:
-        spark.conf.set(key, before)
 
 
 _CLUSTER_ORACLE = _CLUSTER_ORACLE.replace("CAPPED_TEXT_SQL", capped_text_sql())

@@ -135,8 +135,8 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and both join sides); materialize it once so the explode -> hot-gram
     # -> anti-join pipeline executes once, not per branch.
     # DISK_ONLY: the gram stream is data-sized (SCALING.md storage discipline)
-    gf = grams.join(F.broadcast(hot), "gram", "left_anti").localCheckpoint(
-        storageLevel=StorageLevel.DISK_ONLY
+    gf = grams.join(F.broadcast(hot), "gram", "left_anti").transform(
+        ckpt(storage_level=StorageLevel.DISK_ONLY)
     )
     sizes = gf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -231,7 +231,7 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the band table feeds BOTH sides of all 4 band joins (8 consumers);
     # materialize the tiny (doc, 4 ints) signature table once so the
     # explode + 64-conditional-sum aggregation behind it runs once
-    return simhash_near_pairs(simhash_bands(d).localCheckpoint()).orderBy("a", "b")
+    return simhash_near_pairs(simhash_bands(d).transform(ckpt())).orderBy("a", "b")
 
 
 # --------------------------------------------------------------------------
@@ -548,8 +548,8 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and both join sides); materialize it once so the explode -> hot-gram
     # -> anti-join pipeline executes once, not per branch.
     # DISK_ONLY: the gram stream is data-sized (SCALING.md storage discipline)
-    gf = grams.join(F.broadcast(hot), "gram", "left_anti").localCheckpoint(
-        storageLevel=StorageLevel.DISK_ONLY
+    gf = grams.join(F.broadcast(hot), "gram", "left_anti").transform(
+        ckpt(storage_level=StorageLevel.DISK_ONLY)
     )
     sizes = gf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (
@@ -661,8 +661,8 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and both join sides); materialize it once so the explode -> hot-gram
     # -> anti-join pipeline executes once, not per branch.
     # DISK_ONLY: the gram stream is data-sized (SCALING.md storage discipline)
-    gf = grams.join(F.broadcast(hot), "gram", "left_anti").localCheckpoint(
-        storageLevel=StorageLevel.DISK_ONLY
+    gf = grams.join(F.broadcast(hot), "gram", "left_anti").transform(
+        ckpt(storage_level=StorageLevel.DISK_ONLY)
     )
     sizes = gf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     inter = (

@@ -17,6 +17,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
+from un_datapipeline_spark.session import scoped_confs
 from un_datapipeline_spark.tables import (
     cents_sum,
     json_long_strict_sql,
@@ -355,17 +356,15 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files overflow a maxPartitionBytes bin, so nothing packs, while
     # files are never SPLIT (a 1-byte maxPartitionBytes would shatter
     # each file into size/1 empty splits — measured 120 s on sf0.01).
-    prev_cost = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set(
-        "spark.sql.files.openCostInBytes",
-        spark.conf.get("spark.sql.files.maxPartitionBytes"),
-    )
-    try:
+    one_file_per_bin = {
+        "spark.sql.files.openCostInBytes": spark.conf.get(
+            "spark.sql.files.maxPartitionBytes"
+        )
+    }
+    with scoped_confs(spark, one_file_per_bin):
         compacted = spark.read.parquet(small_dir).coalesce(4)
         partitions_after = compacted.rdd.getNumPartitions()
         compacted.write.mode("overwrite").parquet(compact_dir)
-    finally:
-        spark.conf.set("spark.sql.files.openCostInBytes", prev_cost)
     files_after = len(glob.glob(f"{compact_dir}/part-*.parquet"))
     assert files_after <= partitions_after, (files_after, partitions_after)
     # Loud internal check, not a reported value (ADVICE r06): with
@@ -598,13 +597,8 @@ def etl_backfill_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     patch = ev.filter(F.col("event_date") == F.lit("2024-01-05").cast("date")).withColumn(
         "value", F.col("value") * 2
     )
-    key = "spark.sql.sources.partitionOverwriteMode"
-    before = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "dynamic")
+    with scoped_confs(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         patch.write.mode("overwrite").partitionBy("event_date").parquet(out)
-    finally:
-        spark.conf.set(key, before)
     # Explicit schema on read-back (round 10, R10_EMPTY_PLAN class 1):
     # an empty source writes NO data files and schema inference dies
     # with UNABLE_TO_INFER_SCHEMA — the writer KNOWS the schema, so pass

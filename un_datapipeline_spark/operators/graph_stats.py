@@ -121,13 +121,13 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(ckpt())
     )
     # Round-13 (guide §2.2, VERDICT r12 item 4): the static layout and
-    # the 10 iterations run under a pinned small shuffle width
-    # (session.pinned_shuffle_width, env-parameterized): under the
-    # driver's plain session every per-iteration stage previously
-    # dispatched 200 near-empty reduce tasks, and the task dispatch —
-    # not compute — dominated each ~6-7 s iteration at test scale.
-    # Rank/degree state is node-sized, so 8 partitions carry it here; a
-    # cluster sizes SPARK_GRAFT_ITER_PARTITIONS to the state table.
+    # the 10 iterations run under a pinned narrow shuffle width
+    # (session.pinned_shuffle_width): under the driver's plain session
+    # every per-iteration stage previously dispatched 200 near-empty
+    # reduce tasks, and the task dispatch — not compute — dominated each
+    # ~6-7 s iteration at test scale.  Rank/degree state is node-sized,
+    # so one wave per core carries it: the width is derived from the
+    # cluster's defaultParallelism (spark.default.parallelism overrides).
     # Rows-only op: width only changes float merge order, which the
     # rows-only contract already covers.  The static relation MUST be
     # laid out at the same width (its repartition("src") is inside the
@@ -776,10 +776,13 @@ def _kcore_peel(spark, edges, degrees, k):
         if k <= 1 or cur.limit(1).count() > 0:
             break
         k //= 2  # core collapsed — retry the full edge set at half k
+    # Freeze the result inside the pin: a lazy plan would run its degree
+    # aggregate and sort at the session width once the caller acts.
     return (
         degrees(cur)
         .select("node", F.col("d").alias("core_deg"), F.lit(int(k)).alias("k"))
         .orderBy(F.desc("core_deg"), "node")
+        .transform(ckpt())
     )
 
 

@@ -20,6 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
+from un_datapipeline_spark.session import ckpt, scoped_confs
 from un_datapipeline_spark.tables import (
     cents_sum,
     latest_event,
@@ -646,6 +647,17 @@ ORDER BY l.l_returnflag
 """
 
 
+# Force the shuffle-join regime the runtime filter exists for (at test
+# scale Catalyst would otherwise just broadcast the build side), and drop
+# the size gates that assume cluster-sized inputs.
+RUNTIME_BLOOM_CONFS = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+}
+
+
 @register("join_runtime_bloom", oracle=_RUNTIME_BLOOM_ORACLE, tier="T2")
 def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle join accelerated by Catalyst's runtime Bloom-filter
@@ -658,32 +670,13 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass the exact hash join, so the result is identical to the plain
     join (the oracle).  The filter only exists under the runtime-filter
     confs, which are plan-time state — the joined aggregate (≤3 rows) is
-    frozen via eager localCheckpoint while they are set, then the
+    frozen via an eager checkpoint while they are set, then the
     session confs are restored (a lazily-collected plan would otherwise
-    optimize AFTER the finally block, silently dropping the bloom path —
+    optimize AFTER the conf scope, silently dropping the bloom path —
     the same leak ``join_sort_merge`` avoids with a plan-local hint).
     tests/test_plan_shapes.py asserts bloom_filter_agg appears in the
     executed plan."""
-    conf = spark.conf
-    saved = {
-        k: conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        )
-    }
-    try:
-        # Force the shuffle-join regime the filter exists for (at test
-        # scale Catalyst would otherwise just broadcast the build side),
-        # and drop the size gates that assume cluster-sized inputs.
-        conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-        conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-        )
+    with scoped_confs(spark, RUNTIME_BLOOM_CONFS):
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_returnflag", "l_extendedprice", "l_discount"
         )
@@ -702,14 +695,8 @@ def join_runtime_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("revenue"),
             )
             .orderBy("l_returnflag")
-            .localCheckpoint(eager=True)
+            .transform(ckpt())
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
     return out
 
 

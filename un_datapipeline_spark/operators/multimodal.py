@@ -30,6 +30,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
+from un_datapipeline_spark.session import ckpt
 from un_datapipeline_spark.tables import load_table, winner_document_sql
 
 
@@ -654,6 +655,6 @@ def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).createOrReplaceTempView("phash_docs")
     sql = _ph_sql(xor="^", intdiv="DIV").format(tbl="phash_docs")
     head, rest = sql.split("\n)", 1)
-    ph = spark.sql(head + "\n)\nSELECT * FROM ph").localCheckpoint(eager=True)
+    ph = spark.sql(head + "\n)\nSELECT * FROM ph").transform(ckpt())
     ph.createOrReplaceTempView("phash_bands")
     return spark.sql("WITH ph AS (SELECT * FROM phash_bands)" + rest)

@@ -14,12 +14,15 @@ the declared `stream_watermark_late` operator is rows-only.
 State hygiene: every run gets a fresh tmp checkpoint dir and a unique
 memory-sink name — shared state makes availableNow reruns no-ops
 (SURVEY.md §7 hard-part 6).
+
+Every stream runs under ``session.pinned_shuffle_width(stream=True)``:
+with AQE off, a default session's 200 state stores per stateful stage
+were the dominant per-op cost at test scale (~5 s/op).  Fresh
+checkpoints leave the width free to differ per query.
 """
 
 from __future__ import annotations
 
-import contextlib
-import os
 import tempfile
 import uuid
 
@@ -27,33 +30,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.session import ensure_runtime_confs
+from un_datapipeline_spark.session import ensure_runtime_confs, pinned_shuffle_width
 from un_datapipeline_spark.tables import load_table, valid_ts, valid_ts_sql
 
-
-@contextlib.contextmanager
-def stream_shuffle_partitions(spark: SparkSession):
-    """Pin a small shuffle-partition count for the duration of one
-    bounded streaming query, restoring the caller's setting after.
-
-    Why: AQE is disabled inside stateful streaming, so every stateful
-    stage runs exactly ``spark.sql.shuffle.partitions`` tasks AND creates
-    that many state-store instances.  Under a default session (200) each
-    availableNow op pays ~200 near-empty state stores × several stages —
-    measured as the dominant per-op cost at test scale (~5 s/op, the
-    round-1 driver budget killer).  Each operator uses a fresh checkpoint
-    so the partition count is free to differ per query.  On a real
-    cluster you would size this to the stream's state volume
-    (SPARK_GRAFT_STREAM_PARTITIONS, e.g. executors × cores), not to 4.
-    """
-    key = "spark.sql.shuffle.partitions"
-    n = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "4")
-    before = spark.conf.get(key)
-    spark.conf.set(key, n)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, before)
 
 # Physical ts dtypes the events generator has shipped so far, and the
 # stream-source schema type each maps to.  Mirrors the batch dispatch in
@@ -113,7 +92,7 @@ def run_to_memory(df: DataFrame, mode: str = "complete") -> DataFrame:
     """Run a (bounded) streaming DataFrame to completion into a memory
     sink; return the materialized table."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    with stream_shuffle_partitions(df.sparkSession):
+    with pinned_shuffle_width(df.sparkSession, stream=True):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -494,7 +473,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    with stream_shuffle_partitions(spark):
+    with pinned_shuffle_width(spark, stream=True):
         q = (
             s.writeStream.foreachBatch(write_batch)
             .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt_"))
@@ -631,7 +610,7 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             q.awaitTermination()
 
-        with stream_shuffle_partitions(spark):
+        with pinned_shuffle_width(spark, stream=True):
             run_installment(F.col("event_id") % 2 == 0)
             run_installment(F.col("event_id") % 2 == 1)
         with open(done, "w") as f:

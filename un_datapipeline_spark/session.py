@@ -18,13 +18,22 @@ Scale posture: AQE on (coalesce + skew-join split at runtime), shuffle
 partitions sized for the local test data but overridable via
 ``SPARK_GRAFT_SHUFFLE_PARTITIONS`` — on a real cluster you would leave
 the default 200+ and let AQE coalesce.
+
+Operators never set confs by hand: they scope them with
+:func:`scoped_confs` / :func:`pinned_shuffle_width` (a width derived
+from ``defaultParallelism``; ``spark.default.parallelism`` overrides it)
+and materialize through :func:`ckpt`.
 """
 
 from __future__ import annotations
 
+import contextlib
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger("un_datapipeline_spark")
 
 RUNTIME_CONFS = {
     # events.ts is timestamp[ns]; read as long, convert with `ts div 1000`.
@@ -104,12 +113,16 @@ def graft_checkpoint(df, eager: bool = True, storage_level=None):
     ckpt_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     if ckpt_dir:
         sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
+        current = sc.getCheckpointDir()
+        if current is None:
             sc.setCheckpointDir(ckpt_dir)
+        elif not _is_checkpoint_root(current, ckpt_dir):
+            log.warning("SPARK_GRAFT_CHECKPOINT_DIR=%s ignored: context checkpoints to %s",
+                        ckpt_dir, current)
+        if storage_level is not None:
+            log.warning("storage_level=%s dropped by the reliable checkpoint", storage_level)
         return df.checkpoint(eager=eager)
-    if storage_level is not None:
-        return df.localCheckpoint(eager=eager, storageLevel=storage_level)
-    return df.localCheckpoint(eager=eager)
+    return df.localCheckpoint(eager=eager, storageLevel=storage_level)
 
 
 def ckpt(eager: bool = True, storage_level=None):
@@ -124,43 +137,59 @@ def ckpt(eager: bool = True, storage_level=None):
     return apply
 
 
-class pinned_shuffle_width:
-    """Scope a small shuffle width around an ITERATIVE operator's loop
-    (round 13, guide §2.2 "fewer, larger reduce partitions").
+def _is_checkpoint_root(current: str, wanted: str) -> bool:
+    """``sc.getCheckpointDir()`` is the qualified dir + a per-context UUID."""
+    if "://" not in wanted and not wanted.startswith("file:"):
+        wanted = os.path.abspath(wanted)
+    return current.rstrip("/").rsplit("/", 1)[0].endswith(wanted.rstrip("/"))
 
-    The iterative graph/dedup ops re-shuffle node-sized state every
-    round; under the grading driver's plain session that is 200 reduce
+
+@contextlib.contextmanager
+def scoped_confs(spark: SparkSession, confs: dict):
+    """Set ``confs`` for the body, then restore each key's old value —
+    or unset it when it had none — also when the body raises.
+
+    Confs are plan-time state: a plan built inside the scope but
+    optimized after it (a lazy DataFrame returned to the caller) never
+    sees them, so freeze such a result with :func:`ckpt` inside."""
+    conf = spark.conf
+    saved = {k: conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            conf.set(k, str(v))
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+
+
+def pinned_shuffle_width(spark: SparkSession, stream: bool = False):
+    """Scope a narrow shuffle width around an ITERATIVE operator's loop
+    or a bounded stateful stream (guide §2.2 "fewer, larger reduce
+    partitions").
+
+    Iterative graph/dedup ops re-shuffle node-sized state every round;
+    under the grading driver's plain session that is 200 reduce
     partitions per stage — thousands of near-empty tasks per operator
     whose dispatch dominates the runtime at test scale (the
     connected_components precedent: 15 s → 3 s with a pinned width).
-    The width is env-parameterized (`SPARK_GRAFT_ITER_PARTITIONS`,
-    default 8): a cluster run sizes it to the state table, exactly like
-    SPARK_GRAFT_CC_PARTITIONS.  Value-safe wherever the loop state is
-    exact (integer counts/min-labels/BFS sets) or the op is declared
-    rows-only (float fixpoints like PageRank).
-
-    Usage::
+    Value-safe wherever the loop state is exact (integer counts,
+    min-labels, BFS sets) or the op is declared rows-only (float
+    fixpoints like PageRank).  The width is one wave per core on any
+    cluster — ``max(8, defaultParallelism)`` for loops (8 keeps a tiny
+    master off one or two partitions), ``defaultParallelism`` for
+    streams, where AQE is off and each partition is also a state store;
+    ``spark.default.parallelism`` overrides it.  Usage::
 
         with pinned_shuffle_width(spark):
             ... build + run the loop ...
     """
-
-    KEY = "spark.sql.shuffle.partitions"
-
-    def __init__(self, spark: SparkSession, env: str = "SPARK_GRAFT_ITER_PARTITIONS",
-                 default: int = 8):
-        self._spark = spark
-        self._width = os.environ.get(env, str(default))
-        self._before: str | None = None
-
-    def __enter__(self) -> "pinned_shuffle_width":
-        self._before = self._spark.conf.get(self.KEY)
-        self._spark.conf.set(self.KEY, self._width)
-        return self
-
-    def __exit__(self, *exc) -> None:
-        if self._before is not None:
-            self._spark.conf.set(self.KEY, self._before)
+    n = spark.sparkContext.defaultParallelism
+    width = n if stream else max(8, n)
+    return scoped_confs(spark, {"spark.sql.shuffle.partitions": width})
 
 
 def get_spark(
