@@ -185,7 +185,7 @@ def test_scoped_confs_restores_on_exception():
 
 
 @pytest.mark.parametrize(
-    "parallelism, loop, stream", [(4, "8", "4"), (64, "64", "64")]
+    "parallelism, loop, stream", [(4, "8", "4"), (64, "64", "4")]
 )
 def test_pinned_width_follows_default_parallelism(parallelism, loop, stream):
     key = "spark.sql.shuffle.partitions"
@@ -214,7 +214,11 @@ def test_operators_route_confs_and_checkpoints_through_session():
 
 
 class _FakeContext:
-    def __init__(self, current=None):
+    """Fakes the context's checkpoint dir; borrows the real JVM so the
+    dir comparison qualifies paths the way Spark does."""
+
+    def __init__(self, real_sc, current=None):
+        self._jvm, self._jsc = real_sc._jvm, real_sc._jsc
         self.current = current
 
     def getCheckpointDir(self):
@@ -233,19 +237,32 @@ class _FakeFrame:
         return self
 
 
-def test_graft_checkpoint_warns_instead_of_ignoring(tmp_path, monkeypatch, caplog):
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "durable"))
-    sc = _FakeContext()
+def test_graft_checkpoint_warns_instead_of_ignoring(spark, tmp_path, monkeypatch, caplog):
+    monkeypatch.setattr(sess_mod, "_warned", set())
+    durable = tmp_path / "durable"
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(durable))
+    sc = _FakeContext(spark.sparkContext)
     caplog.set_level(logging.WARNING, logger="un_datapipeline_spark")
 
     sess_mod.graft_checkpoint(_FakeFrame(sc))
-    assert not caplog.records, caplog.text  # dir taken, nothing dropped
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", f"file://{durable}/")
+    sess_mod.graft_checkpoint(_FakeFrame(sc))
+    assert not caplog.records, caplog.text  # same dir, spelled two ways
 
-    sess_mod.graft_checkpoint(_FakeFrame(sc), storage_level="DISK_ONLY")
+    for _ in range(2):  # once per process, not per call
+        sess_mod.graft_checkpoint(_FakeFrame(sc), storage_level="DISK_ONLY")
     assert [r.name for r in caplog.records] == ["un_datapipeline_spark"]
     assert "storage_level=DISK_ONLY dropped" in caplog.text
     caplog.clear()
 
-    sess_mod.graft_checkpoint(_FakeFrame(_FakeContext("hdfs://nn/other/0c7e")))
-    assert [r.name for r in caplog.records] == ["un_datapipeline_spark"]
+    # a different root that shares the dir's last component
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", "/durable")
+    sess_mod.graft_checkpoint(_FakeFrame(sc))
+    assert len(caplog.records) == 1 and "ignored" in caplog.text
+    caplog.clear()
+
+    other = _FakeContext(spark.sparkContext, "hdfs://nn/other/0c7e")
+    for _ in range(2):
+        sess_mod.graft_checkpoint(_FakeFrame(other))
+    assert len(caplog.records) == 1
     assert "ignored" in caplog.text and "hdfs://nn/other/0c7e" in caplog.text

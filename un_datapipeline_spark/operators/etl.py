@@ -356,12 +356,8 @@ def etl_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files overflow a maxPartitionBytes bin, so nothing packs, while
     # files are never SPLIT (a 1-byte maxPartitionBytes would shatter
     # each file into size/1 empty splits — measured 120 s on sf0.01).
-    one_file_per_bin = {
-        "spark.sql.files.openCostInBytes": spark.conf.get(
-            "spark.sql.files.maxPartitionBytes"
-        )
-    }
-    with scoped_confs(spark, one_file_per_bin):
+    max_bin = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    with scoped_confs(spark, {"spark.sql.files.openCostInBytes": max_bin}):
         compacted = spark.read.parquet(small_dir).coalesce(4)
         partitions_after = compacted.rdd.getNumPartitions()
         compacted.write.mode("overwrite").parquet(compact_dir)

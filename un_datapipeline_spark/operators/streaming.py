@@ -15,10 +15,10 @@ State hygiene: every run gets a fresh tmp checkpoint dir and a unique
 memory-sink name — shared state makes availableNow reruns no-ops
 (SURVEY.md §7 hard-part 6).
 
-Every stream runs under ``session.pinned_shuffle_width(stream=True)``:
-with AQE off, a default session's 200 state stores per stateful stage
-were the dominant per-op cost at test scale (~5 s/op).  Fresh
-checkpoints leave the width free to differ per query.
+Every stream runs under ``session.pinned_shuffle_width(stream=True)``, a
+fixed 4 partitions: with AQE off, a default session's 200 state stores per
+stateful stage were the dominant per-op cost at test scale (~5 s/op).
+Fresh checkpoints leave the width free to differ per query.
 """
 
 from __future__ import annotations
