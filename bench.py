@@ -659,13 +659,23 @@ def _sf_of(d: str) -> float:
         return -1.0
 
 
-def _dir_bytes(d: str) -> int:
+def _dir_bytes(d: str) -> int | None:
+    """Bytes of every file under ``d``, nested directories included (a
+    partitioned parquet dataset keeps its bytes in subdirectories);
+    None when ``d`` cannot be read locally (missing, unreadable, or a
+    remote URI)."""
+
+    def fail(err: OSError):
+        raise err
+
     try:
         return sum(
-            e.stat().st_size for e in os.scandir(d) if e.is_file()
+            os.path.getsize(os.path.join(root, f))
+            for root, _, files in os.walk(d, onerror=fail)
+            for f in files
         )
     except OSError:
-        return 0
+        return None
 
 
 # Below this input size the bench keeps the measured local posture
@@ -682,7 +692,9 @@ def _use_local_posture(d: str) -> bool:
         return True
     if forced == "cluster":
         return False
-    return _dir_bytes(d) < _LOCAL_POSTURE_MAX_BYTES
+    # an input of unknown size fails open to the scalable configuration
+    n = _dir_bytes(d)
+    return n is not None and n < _LOCAL_POSTURE_MAX_BYTES
 
 
 def main() -> None:

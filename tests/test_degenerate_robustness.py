@@ -9,6 +9,7 @@ the ordinary pytest loop.  See ROUND_NOTES.md round-6 for the catalog.
 from __future__ import annotations
 
 import importlib.util
+import math
 import sys
 from pathlib import Path
 
@@ -111,7 +112,7 @@ def ties_sf(tmp_path_factory):
 # one representative per round-7 --ties class
 TIES_OPS = [
     "llm_knn_join",              # tie-arbitrary argpartition in partial top-k
-    "llm_hard_negatives",        # same class, label-masked kernel copy
+    "llm_hard_negatives",        # same class, through cosine_topk's label mask
     "stream_session_dynamic_gap",  # session boundary inclusive, oracle said >=
     "ts_cross_correlation_lagged",  # zero-variance series ANSI DIVIDE_BY_ZERO
 ]
@@ -568,6 +569,59 @@ def test_mixdim_corpus_class(spark, mixdim_sf, name):
     (llm_vectors.EMBED_DIM) excludes off-width vectors on both
     engines."""
     _both(spark, mixdim_sf, name)
+
+
+def _embeddings_where(src: str, dst: Path, keep) -> str:
+    """A copy of src's embeddings table holding only the rows ``keep``
+    (a pyarrow table → boolean mask function) selects."""
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(f"{src}/embeddings.parquet")
+    pq.write_table(t.filter(keep(t)), dst / "embeddings.parquet")
+    return str(dst)
+
+
+def _rows(df):
+    return sorted(tuple(r) for r in df.toPandas().itertuples(index=False))
+
+
+@pytest.mark.parametrize("name", ["llm_simsearch_ivf", "llm_simsearch_hnsw"])
+def test_ann_ignores_zero_vector(spark, degen_sf, tmp_path, name):
+    """The degenerate corpus' vec_id 0 is the zero vector.  Under the
+    engine-wide norm > 0 rule it is not a vector, so the ANN ops must
+    answer probes 1-39 exactly as on the corpus without it, with no NaN
+    sim.  Normalized without the rule it became a NaN row: IVF's argmax
+    picked it as the best row of its cell for every probe searching that
+    cell, and isfinite then dropped the probe's real candidate."""
+    import pyarrow.compute as pc
+
+    from un_datapipeline_spark.registry import all_operators
+
+    clean = _embeddings_where(degen_sf, tmp_path, lambda t: pc.not_equal(t["vec_id"], 0))
+    fn = all_operators()[name].fn
+    got, want = _rows(fn(spark, degen_sf)), _rows(fn(spark, clean))
+    assert not any(math.isnan(sim) for _, _, sim in got)
+    probes = lambda rows: [r for r in rows if 1 <= r[0] <= 39]  # noqa: E731
+    assert probes(got) == probes(want)
+    assert len(probes(want)) == 39
+
+
+def test_multiprobe_ignores_off_width_vectors(spark, mixdim_sf, tmp_path):
+    """Off-width vectors are not vectors (valid_vec): multi-probe LSH on
+    the mixed-dimension corpus must equal its output on the same corpus
+    with the off-width rows removed — they may neither count in n_cands
+    nor surface with a NULL sim."""
+    import pyarrow.compute as pc
+
+    from un_datapipeline_spark.operators.llm_vectors import EMBED_DIM
+    from un_datapipeline_spark.registry import all_operators
+
+    clean = _embeddings_where(
+        mixdim_sf, tmp_path,
+        lambda t: pc.equal(pc.list_value_length(t["embedding"]), EMBED_DIM),
+    )
+    fn = all_operators()["llm_simsearch_multiprobe"].fn
+    assert _rows(fn(spark, mixdim_sf)) == _rows(fn(spark, clean))
 
 
 @pytest.fixture(scope="module")

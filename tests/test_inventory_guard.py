@@ -276,3 +276,20 @@ def test_oracle_edits_force_refresh():
         "priority.py AND tests/oracle_manifest.json, and re-sweep "
         "(raw-string doctrine, ROUND_NOTES r11 item 7)"
     )
+
+
+def test_vector_kernel_has_one_owner():
+    """llm_vectors.py owns the vector-search kernel: the (sim DESC,
+    nn_id ASC) top-k window and the per-batch vector matrix appear in no
+    other operator module, and no other module carries its own copy of
+    the distributed Lloyd assign closure."""
+    only_owner = re.compile(r'Window\.partitionBy\("a_id"\)|_vec_matrix\(|def make_assign\b')
+    ops = REPO / "un_datapipeline_spark" / "operators"
+    hits = [
+        f"{p.name}:{n}: {line.strip()}"
+        for p in sorted(ops.rglob("*.py"))
+        if p.name != "llm_vectors.py"
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if only_owner.search(line)
+    ]
+    assert not hits, hits

@@ -14,6 +14,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
 from un_datapipeline_spark.session import ckpt
+from un_datapipeline_spark.operators.llm_vectors import (
+    _DOT,
+    _NORM_A,
+    _NORM_B,
+    _VALID_A,
+    _VALID_B,
+    bucket_search,
+    cosine_topk,
+)
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import (
     SIG_PREFIX_CHARS,
@@ -238,37 +247,20 @@ def llm_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding-cosine near-dup
 # --------------------------------------------------------------------------
 
-_DOT = (
-    "list_aggregate(list_transform(list_zip(a.embedding, b.embedding), "
-    "x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)), 'sum')"
-)
-_NA = (
-    "sqrt(list_aggregate(list_transform(a.embedding, "
-    "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))"
-)
-_NB = (
-    "sqrt(list_aggregate(list_transform(b.embedding, "
-    "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum'))"
-)
-
-# NULL-vector contract mirror (round 9): the ONE predicate definition,
-# llm_vectors.valid_vec_sql — DuckDB list aggregates SKIP NULL elements,
-# so without it a corrupt vector would get a partial norm instead of
-# being excluded like cosine_topk's Spark-side filter does.
-from un_datapipeline_spark.operators.llm_vectors import valid_vec_sql as _vv
-
+# The float64 dot / norm texts and the NULL-vector contract mirror
+# (round 9) are llm_vectors' — one definition for every cosine oracle.
 _EMB_DEDUP_ORACLE = f"""
 SELECT a_id, nn_id, ROUND(sim, 6) AS sim,
        CAST(sim >= 0.9 AS INT) AS is_near_dup
 FROM (
   SELECT a.vec_id AS a_id, b.vec_id AS nn_id,
-         {_DOT} / ({_NA} * {_NB}) AS sim,
+         {_DOT} / ({_NORM_A} * {_NORM_B}) AS sim,
          row_number() OVER (PARTITION BY a.vec_id
-                            ORDER BY {_DOT} / ({_NA} * {_NB}) DESC, b.vec_id) AS rn
+                            ORDER BY {_DOT} / ({_NORM_A} * {_NORM_B}) DESC, b.vec_id) AS rn
   FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
   WHERE a.vec_id < 100
-    AND {_vv("a.embedding")} AND {_vv("b.embedding")}
-    AND {_NA} > 0 AND {_NB} > 0
+    AND {_VALID_A} AND {_VALID_B}
+    AND {_NORM_A} > 0 AND {_NORM_B} > 0
 )
 WHERE rn = 1
 """
@@ -280,8 +272,6 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor by cosine plus a ≥0.9 near-dup flag — the semantic-dedup
     screen run after exact/MinHash text dedup.  Uses the broadcast-probe
     matmul scan (llm_vectors.cosine_topk)."""
-    from un_datapipeline_spark.operators.llm_vectors import cosine_topk
-
     em = load_table(spark, sf_dir, "embeddings")
     probes = em.filter(F.col("vec_id") < 100)
     top = cosine_topk(em, probes, k=1, exclude_self=True)
@@ -298,42 +288,6 @@ def llm_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def hyperplane_buckets(em: DataFrame, n_planes: int = 8, seed: int = 42) -> DataFrame:
-    """Sign-random-projection bucket id per vector: fixed pseudo-random
-    hyperplanes → n-bit bucket.  Bucketing is a per-row dot product in
-    Column math — one scan, no shuffle, no driver action.
-
-    Hyperplane coefficients come from a deterministic sin-hash
-    (fract(sin(i·12.9898 + p·78.233 + seed)·43758.5453)·2−1 — the
-    classic shader-noise construction): coefficient (plane, index) is a
-    pure function evaluated inside the JVM lambda, so the plane matrix
-    never touches the driver and the code is embedding-dimension-
-    agnostic (the round-1 version collected one row just to learn the
-    dim — flagged in VERDICT.md).  SRP only needs *fixed* directions
-    spread over the sphere, not high-quality randomness.  8 planes = 256
-    buckets, sized so test-corpus buckets hold a handful of candidates;
-    at 100 TB raise planes (and add multi-probe) to keep bucket
-    occupancy bounded."""
-
-    def coeff(p: int, i):
-        t = F.sin(i.cast("double") * 12.9898 + F.lit(float(p)) * 78.233 + F.lit(float(seed)))
-        t = t * 43758.5453
-        return (t - F.floor(t)) * 2.0 - 1.0
-
-    def proj(p: int):
-        # two-arg (element, index) lambda — PySpark passes the element
-        # index to arity-2 callables, which is exactly what coeff needs
-        return lambda x, i: x.cast("double") * coeff(p, i)
-
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        dot = F.aggregate(
-            F.transform("embedding", proj(p)), F.lit(0.0), lambda a, x: a + x
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return em.withColumn("bucket", bucket)
-
-
 @register("llm_simsearch_lsh", oracle=None, tier="T3")
 def llm_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate nearest neighbor via sign-random-projection LSH:
@@ -341,62 +295,9 @@ def llm_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-quadratic scale path where brute force (llm_simsearch_cosine_
     topk) is the exact baseline.  Rows-only: bucket membership depends
     on float sign evaluations near hyperplanes; approximate-by-design.
-    Output: probe, candidate count in bucket, best in-bucket neighbor.
-
-    Zero-norm + vector-validity exclusion (round 10): cosine is
-    undefined for the zero vector, and one zero probe sharing a bucket
-    with any candidate is an ANSI DIVIDE_BY_ZERO — the engine-wide
-    round-6 norm>0 rule applies to the bucketed path exactly as to the
-    brute-force baseline (exposed when the degenerate corpus went
-    EMBED_DIM-wide and the zero vector gained bucket-mates)."""
-    from un_datapipeline_spark.operators.llm_vectors import valid_vec
-
-    em = load_table(spark, sf_dir, "embeddings")
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform("embedding", lambda x: x.cast("double") * x),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
-    b = hyperplane_buckets(em.filter(valid_vec()).filter(nrm > 0))
-    probes = b.filter(F.col("vec_id") < 100).select(
-        F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_emb"), "bucket"
-    )
-    cands = b.select(F.col("vec_id").alias("nn_id"), "embedding", "bucket")
-    dot = F.aggregate(
-        F.zip_with("a_emb", "embedding", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    nrm_a = F.sqrt(
-        F.aggregate(
-            F.transform("a_emb", lambda x: x.cast("double") * x), F.lit(0.0), lambda a, x: a + x
-        )
-    )
-    nrm_b = F.sqrt(
-        F.aggregate(
-            F.transform("embedding", lambda x: x.cast("double") * x),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-    )
-    pairs = (
-        F.broadcast(probes)
-        .join(cands, "bucket")
-        .filter(F.col("a_id") != F.col("nn_id"))
-        .select("a_id", "nn_id", (dot / (nrm_a * nrm_b)).alias("sim"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        pairs.withColumn("n_cands", F.count(F.lit(1)).over(Window.partitionBy("a_id")))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "n_cands", "nn_id", F.round("sim", 6).alias("sim"))
-        .orderBy("a_id")
-    )
+    Output: probe, candidate count in bucket, best in-bucket neighbor —
+    llm_vectors.bucket_search with no bit flips."""
+    return bucket_search(load_table(spark, sf_dir, "embeddings"))
 
 
 # --------------------------------------------------------------------------

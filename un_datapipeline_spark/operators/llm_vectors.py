@@ -14,14 +14,20 @@ sf0.1 vs ~1 s for this path.)
 At 100 TB the same shape holds: probes broadcast, corpus scanned once,
 partial top-k per partition (bounded memory), final reduce over
 candidates only.  For probe sets too large to broadcast, swap the probe
-side to LSH bucketing (see llm_dedup_near_minhash in llm_text.py).
+side to LSH bucketing (bucket_search: llm_simsearch_lsh and
+llm_simsearch_multiprobe).
+
+The vector-search kernel lives here once — probe prep, batch prep,
+the (sim DESC, nn_id ASC) top-k reduce, the Column dot/sumsq pair and
+Lloyd's k-means — and every vector-search operator calls it (callers:
+SCALING.md §K).
 """
 
 from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
 from un_datapipeline_spark.tables import load_table, winner_embedding_sql
@@ -70,6 +76,20 @@ def valid_vec_sql(col: str = "embedding", dim: int = EMBED_DIM) -> str:
     )
 
 
+def sumsq(col):
+    """Column: float64 sum of squares of an array column (JVM-side HOFs)."""
+    return F.aggregate(
+        F.transform(col, lambda x: x.cast("double") * x), F.lit(0.0), lambda a, x: a + x
+    )
+
+
+def dot(a, b):
+    """Column: float64 dot product of two array columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y), F.lit(0.0), lambda s, x: s + x
+    )
+
+
 def _vec_matrix(pdf, vec_col: str):
     """(keep_mask, float64 matrix) for one Arrow batch: rows whose cell
     is None, dimension-ragged, or carries a NaN-coerced NULL element are
@@ -106,6 +126,43 @@ def _vec_matrix(pdf, vec_col: str):
     return keep, mat
 
 
+def _unit_batch(pdf, id_col: str, vec_col: str, carry: str | None = None):
+    """Batch prep: (ids, unit-row float64 matrix, carried values) for one
+    Arrow batch.  Rows _vec_matrix rejects are dropped, and so are zero
+    vectors: cosine is undefined there (norm product 0), and leaving them
+    in yields engine-dependent NaN ranking (degenerate-corpus sweep,
+    round 6) — the engine-wide norm > 0 rule, carried by every paired
+    oracle too.  ``carry`` names an integer column returned as int64 and
+    masked in step; its NULL rows are dropped BEFORE the int64
+    conversion (a NULL arrives as NaN, and converting the raw column
+    would crash or silently mint INT64_MIN)."""
+    import numpy as np
+
+    keep, mat = _vec_matrix(pdf, vec_col)  # defensive NULL guard
+    if carry is not None:
+        raw = pdf[carry].to_numpy()
+        ok = ~pd.isna(raw)
+        mat = mat[ok[keep]]  # mat holds only the keep rows
+        keep &= ok
+    nrm = np.linalg.norm(mat, axis=1)
+    nz = nrm > 0
+    if not nz.all():
+        keep[keep] = nz
+        mat, nrm = mat[nz], nrm[nz]
+    mat /= nrm[:, None]
+    ids = pdf[id_col].to_numpy(dtype=np.int64)[keep]
+    return ids, mat, (raw[keep].astype(np.int64) if carry is not None else None)
+
+
+def _probe_matrix(probes: DataFrame, id_col: str, vec_col: str, carry: str | None = None):
+    """Probe prep: collect the (small) probe set — one eager job, bounded
+    by the probe count — and run it through the batch prep, so probes and
+    corpus obey one validity / norm > 0 / normalization rule."""
+    cols = [id_col, vec_col] + ([carry] if carry is not None else [])
+    rows = probes.filter(valid_vec(vec_col)).select(*cols).collect()
+    return _unit_batch(pd.DataFrame(rows, columns=cols), id_col, vec_col, carry)
+
+
 def _topk_idx(sims, b_ids, kk):
     """Per-probe indices of the kk best batch candidates under the TOTAL
     order (sim DESC, candidate id ASC) — the same order the final global
@@ -125,6 +182,14 @@ def _topk_idx(sims, b_ids, kk):
     return np.lexsort((bb, -sims), axis=0)[:kk]
 
 
+def topk_reduce(cands: DataFrame, k: int) -> DataFrame:
+    """Global top-k per a_id over a small candidate frame (a_id, nn_id,
+    sim, ...) under the total order (sim DESC, nn_id ASC) — the order
+    _topk_idx and every paired oracle use, so ties are deterministic."""
+    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
+    return cands.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
+
+
 def cosine_topk(
     corpus: DataFrame,
     probes: DataFrame,
@@ -133,36 +198,33 @@ def cosine_topk(
     vec_col: str = "embedding",
     exclude_self: bool = True,
     require_gt: bool = False,
+    differ_on: str | None = None,
 ) -> DataFrame:
     """Top-k cosine neighbors in `corpus` for every row of `probes`.
 
     Returns (a_id, nn_id, sim) with at most k rows per a_id, sim as
     float64.  `exclude_self` drops nn_id == a_id; `require_gt` keeps only
-    nn_id > a_id (the BASELINE SQL-10 pair ordering).
+    nn_id > a_id (the BASELINE SQL-10 pair ordering).  `differ_on` names
+    an integer column (hard-negative mining's label): only pairs whose
+    values differ qualify, rows where it is NULL take no part (SQL's
+    three-valued <>), and the neighbor's value comes back as
+    ``nn_<differ_on>``.  The mask is applied BEFORE the per-batch partial
+    top-k, so the constraint costs no extra pass.
     """
     import numpy as np
 
     # NULL-vector contract: NULL / NULL-element embeddings are not
-    # vectors (see valid_vec) — filtered on BOTH sides, mirrored in the
-    # paired oracles, before the existing zero-norm exclusion below.
+    # vectors (see valid_vec) — filtered on BOTH sides (probes in
+    # _probe_matrix), mirrored in the paired oracles.
     corpus = corpus.filter(valid_vec(vec_col))
-    probes = probes.filter(valid_vec(vec_col))
-    rows = probes.select(id_col, vec_col).collect()
-    p_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    p_mat = (
-        np.array([r[1] for r in rows], dtype=np.float64)
-        if rows
-        else np.zeros((0, 0))
-    )
-    # Zero vectors are excluded from similarity semantics engine-wide:
-    # cosine is undefined there (norm product 0), and leaving them in
-    # yields engine-dependent NaN ranking (degenerate-corpus sweep,
-    # round 6).  The paired oracles carry the same norm > 0 predicate.
-    p_keep = np.linalg.norm(p_mat, axis=1) > 0
-    p_ids, p_mat = p_ids[p_keep], p_mat[p_keep]
-    p_mat /= np.linalg.norm(p_mat, axis=1, keepdims=True)
-
+    cols = [id_col, vec_col]
     out_schema = "a_id long, nn_id long, sim double"
+    if differ_on is not None:
+        corpus = corpus.filter(F.col(differ_on).isNotNull())
+        probes = probes.filter(F.col(differ_on).isNotNull())
+        cols.append(differ_on)
+        out_schema += f", nn_{differ_on} {corpus.schema[differ_on].dataType.simpleString()}"
+    p_ids, p_mat, p_val = _probe_matrix(probes, id_col, vec_col, differ_on)
 
     def partial_topk(batches):
         if p_mat.shape[0] == 0:  # every probe filtered out → no pairs
@@ -170,46 +232,34 @@ def cosine_topk(
         for pdf in batches:
             if pdf.empty:
                 continue
-            vkeep, b_mat = _vec_matrix(pdf, vec_col)  # defensive NULL guard
-            b_ids = pdf[id_col].to_numpy(dtype=np.int64)[vkeep]
+            b_ids, b_mat, b_val = _unit_batch(pdf, id_col, vec_col, differ_on)
             if b_mat.shape[0] == 0:
                 continue
-            b_keep = np.linalg.norm(b_mat, axis=1) > 0
-            if not b_keep.all():
-                b_ids, b_mat = b_ids[b_keep], b_mat[b_keep]
-            if b_mat.shape[0] == 0:
-                continue
-            b_mat /= np.linalg.norm(b_mat, axis=1, keepdims=True)
             sims = b_mat @ p_mat.T  # (batch, probes)
-            if exclude_self or require_gt:
-                mask = (
-                    b_ids[:, None] <= p_ids[None, :]
-                    if require_gt
-                    else b_ids[:, None] == p_ids[None, :]
-                )
-                sims = np.where(mask, -np.inf, sims)
+            if require_gt:
+                sims = np.where(b_ids[:, None] <= p_ids[None, :], -np.inf, sims)
+            elif exclude_self:
+                sims = np.where(b_ids[:, None] == p_ids[None, :], -np.inf, sims)
+            if differ_on is not None:
+                sims = np.where(b_val[:, None] == p_val[None, :], -np.inf, sims)
             kk = min(k, sims.shape[0])
             # per-probe top-kk within this batch under the global total
             # order (sim DESC, nn_id ASC) — see _topk_idx for why
             # argpartition is not tie-safe here
             idx = _topk_idx(sims, b_ids, kk)  # (kk, probes)
-            a = np.repeat(p_ids[None, :], kk, axis=0).ravel()
-            nn = b_ids[idx].ravel()
             sv = np.take_along_axis(sims, idx, axis=0).ravel()
             keep = np.isfinite(sv)
-            yield pd.DataFrame({"a_id": a[keep], "nn_id": nn[keep], "sim": sv[keep]})
+            out = {
+                "a_id": np.repeat(p_ids[None, :], kk, axis=0).ravel()[keep],
+                "nn_id": b_ids[idx].ravel()[keep],
+                "sim": sv[keep],
+            }
+            if differ_on is not None:
+                out[f"nn_{differ_on}"] = b_val[idx].ravel()[keep]
+            yield pd.DataFrame(out)
 
-    candidates = corpus.select(id_col, vec_col).mapInPandas(partial_topk, out_schema)
-    # Global top-k over the small candidate set; (sim DESC, nn_id) makes
-    # ties deterministic.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        candidates.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    candidates = corpus.select(*cols).mapInPandas(partial_topk, out_schema)
+    return topk_reduce(candidates, k)
 
 
 # DuckDB oracle computes the identical float64 math explicitly (not
@@ -340,15 +390,10 @@ def llm_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n / min_dim / max_dim count every row."""
     em = load_table(spark, sf_dir, "embeddings")
     dbl = F.transform("embedding", lambda x: x.cast("double"))
-    sumsq = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     elsum = F.aggregate(dbl, F.lit(0.0), lambda a, x: a + x)
     return em.groupBy("label").agg(
         F.count(F.lit(1)).alias("n"),
-        F.round(F.avg(F.when(valid_vec(), F.sqrt(sumsq))), 6).alias("avg_l2"),
+        F.round(F.avg(F.when(valid_vec(), F.sqrt(sumsq("embedding")))), 6).alias("avg_l2"),
         # greatest(size, 1): a zero-length vector is DIVIDE_BY_ZERO under
         # ANSI Spark while DuckDB NULLs (the ADVICE r05 short-input
         # class); under the dim contract such a row takes the NULL branch,
@@ -368,6 +413,21 @@ def llm_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _lloyd(x, cent, n_iters: int):
+    """Lloyd's k-means on the driver, in place on ``cent``: each round
+    assigns every row of ``x`` to its nearest centroid (squared L2; ties
+    → the lower index, np.argmin) and moves each non-empty centroid to
+    its members' mean.  Returns ``cent``."""
+    for _ in range(n_iters):
+        d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+        assign = d2.argmin(axis=1)
+        for c in range(len(cent)):
+            m = assign == c
+            if m.any():
+                cent[c] = x[m].mean(axis=0)
+    return cent
+
+
 def train_ivf_centroids(
     corpus: DataFrame,
     n_cells: int = 16,
@@ -383,8 +443,10 @@ def train_ivf_centroids(
     O(corpus); only ASSIGNMENT scans the corpus."""
     import numpy as np
 
-    # NULL-vector contract: corrupt vectors never train the quantizer
-    corpus = corpus.filter(valid_vec(vec_col))
+    # NULL-vector contract + norm > 0 (see _unit_batch): corrupt and zero
+    # vectors never train the quantizer — a zero vector has no direction
+    # to quantize, and the searches drop it anyway
+    corpus = corpus.filter(valid_vec(vec_col) & (sumsq(vec_col) > 0))
     # orderBy before limit: a bare limit takes partition-layout-dependent
     # rows — ordering pins the training sample across cluster layouts.
     rows = (
@@ -399,14 +461,7 @@ def train_ivf_centroids(
     x = np.array([r[0] for r in rows], dtype=np.float64)
     rng = np.random.RandomState(seed)
     cent = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
-    for _ in range(n_iters):
-        d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for c in range(len(cent)):
-            m = assign == c
-            if m.any():
-                cent[c] = x[m].mean(axis=0)
-    return cent
+    return _lloyd(x, cent, n_iters)
 
 
 @register("llm_simsearch_ivf", oracle=None, tier="T3")
@@ -422,18 +477,13 @@ def llm_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = load_table(spark, sf_dir, "embeddings").filter(valid_vec())
     cent = train_ivf_centroids(em)
-
-    probe_rows = em.filter(F.col("vec_id") < 100).select("vec_id", "embedding").collect()
-    if cent.shape[0] == 0 or not probe_rows:
-        # every probe (or the whole corpus) filtered out by the
-        # NULL-vector contract: the 1-D empty np.array has no axis=1 to
-        # normalize over (review catch, round 9) — the answer is simply
-        # no neighbor pairs
+    p_ids, p_mat, _ = _probe_matrix(em.filter(F.col("vec_id") < 100), "vec_id", "embedding")
+    if cent.shape[0] == 0 or p_mat.shape[0] == 0:
+        # every probe (or the whole corpus) filtered out by the validity /
+        # norm > 0 rules: no cells to rank — the answer is simply no
+        # neighbor pairs
         return spark.createDataFrame([], "a_id long, nn_id long, sim double")
     cnorm = cent / np.linalg.norm(cent, axis=1, keepdims=True)
-    p_ids = np.array([r[0] for r in probe_rows], dtype=np.int64)
-    p_mat = np.array([r[1] for r in probe_rows], dtype=np.float64)
-    p_mat /= np.linalg.norm(p_mat, axis=1, keepdims=True)
     # n_probe nearest cells per probe (by centroid cosine)
     N_PROBE = 4
     p_cells = np.argsort(-(p_mat @ cnorm.T), axis=1)[:, :N_PROBE]  # (probes, 4)
@@ -446,11 +496,9 @@ def llm_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            vkeep, b_mat = _vec_matrix(pdf, "embedding")  # defensive
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)[vkeep]
+            b_ids, b_mat, _ = _unit_batch(pdf, "vec_id", "embedding")
             if b_mat.shape[0] == 0:
                 continue
-            b_mat /= np.linalg.norm(b_mat, axis=1, keepdims=True)
             cells = (b_mat @ cnorm.T).argmax(axis=1)
             out_a, out_n, out_s = [], [], []
             for c in np.unique(cells):
@@ -472,15 +520,9 @@ def llm_simsearch_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = em.select("vec_id", "embedding").mapInPandas(
         search, "a_id long, nn_id long, sim double"
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "nn_id", F.round("sim", 6).alias("sim"))
-        .orderBy("a_id")
-    )
+    return topk_reduce(cands, 1).select(
+        "a_id", "nn_id", F.round("sim", 6).alias("sim")
+    ).orderBy("a_id")
 
 
 # avg_l2 validity-mirror: an invalid embedding's (NULL / NULL-element /
@@ -507,17 +549,12 @@ def llm_embed_join_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides are huge → plain shuffle hash join on the key; no broadcast."""
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
-    sumsq = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     return (
         d.join(e, d.doc_id == e.vec_id)
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(F.when(valid_vec(), F.sqrt(sumsq))), 6).alias("avg_l2"),
+            F.round(F.avg(F.when(valid_vec(), F.sqrt(sumsq("embedding")))), 6).alias("avg_l2"),
             F.round(F.avg("n_chars"), 6).alias("avg_chars"),
         )
     )
@@ -605,28 +642,20 @@ def llm_simsearch_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     em = load_table(spark, sf_dir, "embeddings").filter(valid_vec())
-    probe_rows = em.filter(F.col("vec_id") < 100).select("vec_id", "embedding").collect()
-    if not probe_rows:
-        # all probes invalid under the NULL-vector contract — the empty
-        # 1-D np.array has no axis=1 to normalize over (review catch)
-        return spark.createDataFrame([], "a_id long, nn_id long, sim double")
-    p_ids = np.array([r[0] for r in probe_rows], dtype=np.int64)
-    p_mat = np.array([r[1] for r in probe_rows], dtype=np.float64)
-    p_mat /= np.linalg.norm(p_mat, axis=1, keepdims=True)
+    p_ids, p_mat, _ = _probe_matrix(em.filter(F.col("vec_id") < 100), "vec_id", "embedding")
 
     def shard_search(batches):
+        if p_mat.shape[0] == 0:  # every probe filtered out → no pairs
+            return
         for pdf in batches:
             if pdf.empty:
                 continue
-            vkeep, b_mat = _vec_matrix(pdf, "embedding")  # defensive
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)[vkeep]
+            b_ids, b_mat, _ = _unit_batch(pdf, "vec_id", "embedding")
             if b_mat.shape[0] == 0:
                 continue
             # insert order must not depend on arrow batch layout
             order = np.argsort(b_ids, kind="stable")
-            b_ids = b_ids[order]
-            b_mat = b_mat[order]
-            b_mat /= np.linalg.norm(b_mat, axis=1, keepdims=True)
+            b_ids, b_mat = b_ids[order], b_mat[order]
             graph = _nsw_build(b_mat, m=8, ef=32)
             out_a, out_n, out_s = [], [], []
             for pi in range(len(p_ids)):
@@ -642,15 +671,9 @@ def llm_simsearch_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = em.select("vec_id", "embedding").mapInPandas(
         shard_search, "a_id long, nn_id long, sim double"
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "nn_id", F.round("sim", 6).alias("sim"))
-        .orderBy("a_id")
-    )
+    return topk_reduce(cands, 1).select(
+        "a_id", "nn_id", F.round("sim", 6).alias("sim")
+    ).orderBy("a_id")
 
 
 # NULL-vector contract (round 9): a NULL embedding posexplodes to zero
@@ -747,14 +770,7 @@ def train_pq_codebooks(corpus, sample: int = 512, n_iters: int = 5, seed: int = 
         cent = xs[rng.choice(len(xs), size=min(PQ_CODEBOOK, len(xs)), replace=False)]
         if len(cent) < PQ_CODEBOOK:
             cent = np.vstack([cent] * (-(-PQ_CODEBOOK // len(cent))))[:PQ_CODEBOOK]
-        for _ in range(n_iters):
-            d2 = ((xs[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(PQ_CODEBOOK):
-                m = assign == c
-                if m.any():
-                    cent[c] = xs[m].mean(axis=0)
-        books[s] = cent
+        books[s] = _lloyd(xs, cent, n_iters)
     return books
 
 
@@ -836,85 +852,170 @@ def llm_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     are what make an embedding model's contrastive loss informative;
     random negatives are trivially separable.
 
-    Same scan shape as cosine_topk with one twist: the probe closure
-    also ships the anchors' labels, and the batch matmul masks
-    same-label columns to −inf BEFORE the per-batch partial top-k — so
-    the label constraint costs zero extra passes.  One corpus scan,
-    candidates bounded by partitions × probes × k, final window on the
-    tiny candidate set."""
+    It is cosine_topk with ``differ_on="label"``: the probe closure also
+    ships the anchors' labels, and the batch matmul masks same-label
+    columns to −inf BEFORE the per-batch partial top-k — so the label
+    constraint costs zero extra passes.  One corpus scan, candidates
+    bounded by partitions × probes × k, final window on the tiny
+    candidate set.  An unlabeled vector can be neither anchor nor
+    negative (the oracle's three-valued ``a.label <> b.label``)."""
+    em = load_table(spark, sf_dir, "embeddings")
+    # exclude_self=False mirrors the oracle, which pairs on labels alone:
+    # a re-embedded vec_id may carry a different label than its twin
+    top = cosine_topk(
+        em, em.filter(F.col("vec_id") < 20), k=5, exclude_self=False, differ_on="label"
+    )
+    return top.select(
+        "a_id", "nn_id", F.col("nn_label").alias("neg_label"), F.round("sim", 6).alias("sim")
+    )
+
+
+# ---------------------------------------------------------------------------
+# LSH-bucketed similarity search (the scale path past brute force)
+# ---------------------------------------------------------------------------
+
+
+def hyperplane_buckets(em: DataFrame, n_planes: int = 8, seed: int = 42) -> DataFrame:
+    """Sign-random-projection bucket id per vector: fixed pseudo-random
+    hyperplanes → n-bit bucket.  Bucketing is a per-row dot product in
+    Column math — one scan, no shuffle, no driver action.
+
+    Hyperplane coefficients come from a deterministic sin-hash
+    (fract(sin(i·12.9898 + p·78.233 + seed)·43758.5453)·2−1 — the
+    classic shader-noise construction): coefficient (plane, index) is a
+    pure function evaluated inside the JVM lambda, so the plane matrix
+    never touches the driver and the code is embedding-dimension-
+    agnostic (the round-1 version collected one row just to learn the
+    dim — flagged in VERDICT.md).  SRP only needs *fixed* directions
+    spread over the sphere, not high-quality randomness.  8 planes = 256
+    buckets, sized so test-corpus buckets hold a handful of candidates;
+    at 100 TB raise planes (and add multi-probe) to keep bucket
+    occupancy bounded."""
+
+    def coeff(p: int, i):
+        t = F.sin(i.cast("double") * 12.9898 + F.lit(float(p)) * 78.233 + F.lit(float(seed)))
+        t = t * 43758.5453
+        return (t - F.floor(t)) * 2.0 - 1.0
+
+    def proj(p: int):
+        # two-arg (element, index) lambda — PySpark passes the element
+        # index to arity-2 callables, which is exactly what coeff needs
+        return lambda x, i: x.cast("double") * coeff(p, i)
+
+    bucket = F.lit(0)
+    for p in range(n_planes):
+        side = F.aggregate(
+            F.transform("embedding", proj(p)), F.lit(0.0), lambda a, x: a + x
+        )
+        bucket = bucket + F.when(side > 0, F.lit(1 << p)).otherwise(F.lit(0))
+    return em.withColumn("bucket", bucket)
+
+
+def bucket_search(em: DataFrame, n_flips: int = 0) -> DataFrame:
+    """Approximate top-1 neighbor for the probes vec_id < 100 via
+    sign-random-projection LSH: each probe searches its own bucket plus
+    the ``n_flips`` buckets one sign bit away (bits 0 … n_flips−1) —
+    single-probe LSH at 0, multi-probe at 8 (every hyperplane).  Candidate work per
+    probe is (1 + n_flips) buckets' worth — bucket-bounded, never
+    corpus-sized.  Output (a_id, n_cands, nn_id, sim): n_cands counts the
+    distinct candidate ids in the probe's buckets (a re-embedded vec_id
+    is one candidate), nn_id/sim its best under topk_reduce's order.
+
+    Zero-norm + vector-validity exclusion (round 10): cosine is
+    undefined for the zero vector, and one zero probe sharing a bucket
+    with any candidate is an ANSI DIVIDE_BY_ZERO; a NULL-element or
+    off-width vector would join with a NULL sim and still count in
+    n_cands.  The valid_vec + norm > 0 rules apply here exactly as in
+    the brute-force baseline."""
+    em = em.filter(valid_vec() & (sumsq("embedding") > 0))
+    b = hyperplane_buckets(em)
+    own = F.col("bucket")
+    probes = b.filter(F.col("vec_id") < 100).select(
+        F.col("vec_id").alias("a_id"),
+        F.col("embedding").alias("a_emb"),
+        F.explode(
+            F.array(own, *[own.bitwiseXOR(F.lit(1 << p)) for p in range(n_flips)])
+        ).alias("bucket"),
+    )
+    cands = b.select(F.col("vec_id").alias("nn_id"), "embedding", "bucket")
+    sim = dot("a_emb", "embedding") / (F.sqrt(sumsq("a_emb")) * F.sqrt(sumsq("embedding")))
+    ids = F.collect_set("nn_id").over(Window.partitionBy("a_id"))
+    pairs = (
+        F.broadcast(probes)
+        .join(cands, "bucket")
+        .filter(F.col("a_id") != F.col("nn_id"))
+        .select("a_id", "nn_id", sim.alias("sim"))
+        .withColumn("n_cands", F.size(ids).cast("long"))
+    )
+    return topk_reduce(pairs, 1).select(
+        "a_id", "n_cands", "nn_id", F.round("sim", 6).alias("sim")
+    ).orderBy("a_id")
+
+
+# ---------------------------------------------------------------------------
+# Distributed Lloyd's k-means
+# ---------------------------------------------------------------------------
+
+
+def lloyd_kmeans(em: DataFrame, k: int, rounds: int):
+    """Lloyd's k-means over the valid vectors of ``em`` (vec_id,
+    embedding): deterministic init (the k smallest vec_ids — a real
+    deployment seeds with k-means|| instead; determinism is the point
+    here), then ``rounds`` × (ONE Arrow-batched assignment scan with the
+    k×dim centroids in the closure + a partial-aggregated (cluster, dim)
+    mean update collected driver-side).  Nothing driver-side ever
+    exceeds k×dim.
+
+    Returns (assigned, centroids): the last assignment frame (vec_id,
+    embedding, cluster_id, sqdist), computed with the centroids the last
+    update started from, and the centroids after that update."""
     import numpy as np
 
-    # label IS NOT NULL: an unlabeled vector can be neither anchor nor
-    # negative — the oracle's `a.label <> b.label` already drops NULL
-    # labels (three-valued <>), and the kernel's int64 coercion would
-    # otherwise turn a NULL label into a silent INT64_MIN.
-    em = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(valid_vec() & F.col("label").isNotNull())
-    )
-    rows = em.filter(F.col("vec_id") < 20).select("vec_id", "embedding", "label").collect()
-    out_schema = "a_id long, nn_id long, neg_label int, sim double"
-    if not rows:
-        # all anchors invalid (NULL vector / NULL label) — the empty 1-D
-        # np.array has no axis=1 to normalize over (review catch)
-        return spark.createDataFrame([], out_schema)
-    p_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    p_mat = np.array([r[1] for r in rows], dtype=np.float64)
-    p_lbl = np.array([r[2] for r in rows], dtype=np.int64)
-    # zero vectors excluded from similarity semantics (see cosine_topk)
-    p_keep = np.linalg.norm(p_mat, axis=1) > 0
-    p_ids, p_mat, p_lbl = p_ids[p_keep], p_mat[p_keep], p_lbl[p_keep]
-    p_mat /= np.linalg.norm(p_mat, axis=1, keepdims=True)
-    k = 5
+    # NULL-vector contract (round 9): corrupt vectors neither seed, train,
+    # nor join clusters
+    em = em.filter(valid_vec()).select("vec_id", "embedding")
+    init = em.orderBy("vec_id").limit(k).collect()  # k rows — bounded by design
+    centroids = np.array([r.embedding for r in init], dtype=np.float64)
 
-    def partial_topk(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            vkeep, b_mat = _vec_matrix(pdf, "embedding")  # defensive
-            # mask BEFORE the int64 conversion: a NULL label arrives as
-            # NaN and .to_numpy(dtype=int64) on the raw column would
-            # crash (or silently mint INT64_MIN) ahead of the vector
-            # guard (review catch).  Upstream label.isNotNull() already
-            # excludes such rows; this keeps the kernel total on raw
-            # data.  lbl_ok[vkeep] re-indexes the label mask onto
-            # b_mat's rows (b_mat holds only the vkeep rows).
-            lbl_raw = pdf["label"].to_numpy()
-            lbl_ok = ~pd.isna(lbl_raw)
-            b_mat = b_mat[lbl_ok[vkeep]]
-            keep = vkeep & lbl_ok
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)[keep]
-            b_lbl = lbl_raw[keep].astype(np.int64)
-            if b_mat.shape[0] == 0:
-                continue
-            b_keep = np.linalg.norm(b_mat, axis=1) > 0
-            if not b_keep.all():
-                b_ids, b_lbl, b_mat = b_ids[b_keep], b_lbl[b_keep], b_mat[b_keep]
-            if b_mat.shape[0] == 0:
-                continue
-            b_mat /= np.linalg.norm(b_mat, axis=1, keepdims=True)
-            sims = b_mat @ p_mat.T  # (batch, probes)
-            sims = np.where(b_lbl[:, None] == p_lbl[None, :], -np.inf, sims)
-            kk = min(k, sims.shape[0])
-            # tie-safe partial top-k (sim DESC, nn_id ASC) — _topk_idx
-            idx = _topk_idx(sims, b_ids, kk)
-            a = np.repeat(p_ids[None, :], kk, axis=0).ravel()
-            nn = b_ids[idx].ravel()
-            lb = b_lbl[idx].ravel()
-            sv = np.take_along_axis(sims, idx, axis=0).ravel()
-            keep = np.isfinite(sv)
-            yield pd.DataFrame(
-                {"a_id": a[keep], "nn_id": nn[keep], "neg_label": lb[keep], "sim": sv[keep]}
-            )
+    def make_assign(cents):
+        def assign(batches):
+            for pdf in batches:
+                vkeep, mat = _vec_matrix(pdf, "embedding")  # defensive
+                if mat.shape[0] == 0:
+                    continue
+                pdf = pdf[vkeep]
+                # squared euclidean via ||x||² - 2x·c + ||c||²; argmin ties
+                # resolve to the lowest cluster id (np.argmin contract).
+                d2 = (
+                    (mat * mat).sum(axis=1, keepdims=True)
+                    - 2.0 * mat @ cents.T
+                    + (cents * cents).sum(axis=1)
+                )
+                yield pd.DataFrame(
+                    {
+                        "vec_id": pdf["vec_id"],
+                        "embedding": pdf["embedding"],
+                        "cluster_id": d2.argmin(axis=1).astype("int32"),
+                        "sqdist": d2.min(axis=1),
+                    }
+                )
 
-    cands = em.select("vec_id", "embedding", "label").mapInPandas(
-        partial_topk, "a_id long, nn_id long, neg_label int, sim double"
-    )
-    from pyspark.sql import Window
+        return assign
 
-    w = Window.partitionBy("a_id").orderBy(F.desc("sim"), F.asc("nn_id"))
-    return (
-        cands.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("a_id", "nn_id", "neg_label", F.round("sim", 6).alias("sim"))
-    )
+    schema = "vec_id long, embedding array<float>, cluster_id int, sqdist double"
+    assigned = None
+    for _ in range(rounds):
+        assigned = em.mapInPandas(make_assign(centroids), schema)
+        # centroid update: posexplode dims → (cluster, dim) means; the
+        # collected frame is k×dim rows — constant-size driver traffic.
+        upd = (
+            assigned.select("cluster_id", F.posexplode("embedding").alias("dim", "v"))
+            .groupBy("cluster_id", "dim")
+            .agg(F.avg("v").alias("m"))
+            .collect()
+        )
+        new_c = centroids.copy()
+        for r in upd:
+            new_c[r.cluster_id][r.dim] = r.m
+        centroids = new_c
+    return assigned, centroids

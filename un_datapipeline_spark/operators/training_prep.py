@@ -409,68 +409,13 @@ def llm_kmeans_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     here).  Rows-only: the iterative refinement has no single-query SQL
     equivalent; pytest asserts sizes, determinism, and monotone inertia.
 
-    Scale shape per iteration: centroids are k×64 floats broadcast in
-    the UDF closure; assignment is ONE corpus scan (Arrow-batched numpy
-    matmul — same kernel as cosine_topk); the centroid update is a
-    partial-aggregated groupBy on 8 keys over posexploded dims.  Nothing
-    driver-side ever exceeds k×dim."""
-    import numpy as np
-    import pandas as pd
+    Scale shape per iteration: llm_vectors.lloyd_kmeans, the vector
+    family's shared k-means — ONE Arrow-batched matmul scan behind the
+    same batch guard as cosine_topk, then a partial-aggregated (cluster,
+    dim) groupBy; nothing driver-side ever exceeds k×dim."""
+    from un_datapipeline_spark.operators.llm_vectors import lloyd_kmeans
 
-    from un_datapipeline_spark.operators.llm_vectors import _vec_matrix, valid_vec
-
-    # NULL-vector contract (round 9): corrupt vectors neither seed, train,
-    # nor join clusters — same rule as cosine_topk.
-    em = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(valid_vec())
-        .select("vec_id", "embedding")
-    )
-    k = 8
-    init = em.orderBy("vec_id").limit(k).collect()  # k rows — bounded by design
-    centroids = np.array([r.embedding for r in init], dtype=np.float64)
-
-    def make_assign(cents):
-        def assign(batches):
-            for pdf in batches:
-                vkeep, mat = _vec_matrix(pdf, "embedding")  # defensive
-                if mat.shape[0] == 0:
-                    continue
-                pdf = pdf[vkeep]
-                # squared euclidean via ||x||² - 2x·c + ||c||²; argmin ties
-                # resolve to the lowest cluster id (np.argmin contract).
-                d2 = (
-                    (mat * mat).sum(axis=1, keepdims=True)
-                    - 2.0 * mat @ cents.T
-                    + (cents * cents).sum(axis=1)
-                )
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "embedding": pdf["embedding"],
-                        "cluster_id": d2.argmin(axis=1).astype("int32"),
-                        "sqdist": d2.min(axis=1),
-                    }
-                )
-
-        return assign
-
-    schema = "vec_id long, embedding array<float>, cluster_id int, sqdist double"
-    assigned = None
-    for _ in range(3):
-        assigned = em.mapInPandas(make_assign(centroids), schema)
-        # centroid update: posexplode dims → (cluster, dim) means; the
-        # collected frame is k×dim rows — constant-size driver traffic.
-        upd = (
-            assigned.select("cluster_id", F.posexplode("embedding").alias("dim", "v"))
-            .groupBy("cluster_id", "dim")
-            .agg(F.avg("v").alias("m"))
-            .collect()
-        )
-        new_c = centroids.copy()
-        for r in upd:
-            new_c[r.cluster_id][r.dim] = r.m
-        centroids = new_c
+    assigned, _ = lloyd_kmeans(load_table(spark, sf_dir, "embeddings"), k=8, rounds=3)
     return (
         assigned.groupBy("cluster_id")
         .agg(
@@ -746,9 +691,8 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe that makes O(n²) cosine dedup tractable at web scale by
     paying the quadratic cost only inside bounded clusters.
 
-    Pipeline: deterministic k-means (same init/iteration scheme as
-    llm_kmeans_cluster — k smallest vec_ids, 3 Lloyd rounds, broadcast
-    centroids, one Arrow-batched scan per round), then per-cluster
+    Pipeline: llm_vectors.lloyd_kmeans (k smallest vec_ids, 3 rounds —
+    the same k-means as llm_kmeans_cluster), then per-cluster
     greedy prune via applyInPandas: scanning members by ASCENDING
     similarity to their centroid (the paper's keep-the-outliers order;
     vec_id tiebreak), a member is kept iff its max cosine to the
@@ -765,57 +709,13 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from un_datapipeline_spark.operators.llm_vectors import _vec_matrix, valid_vec
+    from un_datapipeline_spark.operators.llm_vectors import lloyd_kmeans
 
-    # NULL-vector contract (round 9): corrupt vectors are excluded from
-    # semantic dedup entirely — same rule as llm_kmeans_cluster.
-    em = (
-        load_table(spark, sf_dir, "embeddings")
-        .filter(valid_vec())
-        .select("vec_id", "embedding")
+    # corrupt vectors are excluded from semantic dedup entirely (the
+    # NULL-vector contract inside lloyd_kmeans)
+    assigned, final_cents = lloyd_kmeans(
+        load_table(spark, sf_dir, "embeddings"), k=SEMDEDUP_K, rounds=3
     )
-    k = SEMDEDUP_K
-    init = em.orderBy("vec_id").limit(k).collect()  # k rows — bounded
-    centroids = np.array([r.embedding for r in init], dtype=np.float64)
-
-    def make_assign(cents):
-        def assign(batches):
-            for pdf in batches:
-                vkeep, mat = _vec_matrix(pdf, "embedding")  # defensive
-                if mat.shape[0] == 0:
-                    continue
-                pdf = pdf[vkeep]
-                d2 = (
-                    (mat * mat).sum(axis=1, keepdims=True)
-                    - 2.0 * mat @ cents.T
-                    + (cents * cents).sum(axis=1)
-                )
-                yield pd.DataFrame(
-                    {
-                        "vec_id": pdf["vec_id"],
-                        "embedding": pdf["embedding"],
-                        "cluster_id": d2.argmin(axis=1).astype("int32"),
-                    }
-                )
-
-        return assign
-
-    schema = "vec_id long, embedding array<float>, cluster_id int"
-    assigned = None
-    for _ in range(3):
-        assigned = em.mapInPandas(make_assign(centroids), schema)
-        upd = (
-            assigned.select("cluster_id", F.posexplode("embedding").alias("dim", "v"))
-            .groupBy("cluster_id", "dim")
-            .agg(F.avg("v").alias("m"))
-            .collect()  # k×dim rows — constant-size driver traffic
-        )
-        new_c = centroids.copy()
-        for r in upd:
-            new_c[r.cluster_id][r.dim] = r.m
-        centroids = new_c
-
-    final_cents = centroids
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         cid = int(pdf["cluster_id"].iloc[0])
