@@ -450,7 +450,7 @@ def timewarp_sf(tmp_path_factory):
 
 
 # one representative per timestamp-validity hazard class (tables.py
-# valid_ts contract; corpus: tools/probe_timewarp_r10.py)
+# valid_ts contract; corpus: `sweep_degenerate.py --timewarp`)
 TIMEWARP_OPS = [
     "ts_resample_ffill",      # bounded-spine: one decades-out ts would
     #                           materialize a 150-year hourly grid (OOM
@@ -506,7 +506,7 @@ def magnitude_sf(tmp_path_factory):
 
 
 # one representative per round-10 --magnitude mechanism
-# (R10_MAGNITUDE_PLAN.md; corpus: tools/probe_magnitude_r10.py)
+# (R10_MAGNITUDE_PLAN.md; corpus: `sweep_degenerate.py --magnitude`)
 MAGNITUDE_OPS = [
     "ts_lttb_downsample",       # exact-cents CAST(round(value*100) AS
     #                             BIGINT) lane — int64 overflow at 1e18
@@ -552,7 +552,7 @@ def mixdim_sf(tmp_path_factory):
     return str(d)
 
 
-# one representative per --mixdim mechanism (tools/probe_mixdim_r10.py)
+# one representative per --mixdim mechanism (`sweep_degenerate.py --mixdim`)
 MIXDIM_OPS = [
     "llm_simsearch_cosine_topk",  # matrix kernel: ragged lengths crashed
     #                               np.stack before the EMBED_DIM layer
@@ -912,7 +912,7 @@ def orphans_sf(tmp_path_factory):
 
 
 # one representative per orphan-FK risk class the round-12 probe named
-# (tools/probe_orphans_r12.py; full-registry catalog on the corpus was
+# (`sweep_degenerate.py --orphans`; full-registry catalog on the corpus was
 # 329 ok + 22 rows-only, fail=0 — the class was already covered by the
 # round-9 NULL contracts, this pins it in the suite)
 ORPHAN_OPS = [

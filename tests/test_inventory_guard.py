@@ -293,3 +293,38 @@ def test_vector_kernel_has_one_owner():
         if only_owner.search(line)
     ]
     assert not hits, hits
+
+
+def _oracle_lines(src: str) -> set[int]:
+    """Line numbers of module-level ``*_ORACLE`` assignments: reference
+    SQL texts, which replay the algorithm in DuckDB on purpose."""
+    import ast
+
+    lines: set[int] = set()
+    for node in ast.parse(src).body:
+        if isinstance(node, ast.Assign) and any(
+            isinstance(t, ast.Name) and t.id.endswith("_ORACLE") for t in node.targets
+        ):
+            lines.update(range(node.lineno, node.end_lineno + 1))
+    return lines
+
+
+def test_gram_overlap_has_one_owner():
+    """dedup_extras.py owns the gram-overlap kernel (doc_trigrams,
+    drop_hot, overlap_pairs): no other operator module builds word
+    trigrams, caps hub keys or writes the gram-equality self-join
+    itself.  Oracle SQL texts are exempt."""
+    only_owner = re.compile(r"x\.gram = y\.gram|> MAX_GRAM_DF|trigram_array\(")
+    ops = REPO / "un_datapipeline_spark" / "operators"
+    hits = []
+    for p in sorted(ops.rglob("*.py")):
+        if p.name == "dedup_extras.py":
+            continue
+        src = p.read_text()
+        skip = _oracle_lines(src)
+        hits += [
+            f"{p.name}:{n}: {line.strip()}"
+            for n, line in enumerate(src.splitlines(), 1)
+            if n not in skip and only_owner.search(line)
+        ]
+    assert not hits, hits

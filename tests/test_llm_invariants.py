@@ -16,6 +16,7 @@ from un_datapipeline_spark.operators.llm_text import (
     N_HASHES,
     lsh_candidate_pairs,
     minhash_signatures,
+    shingle_sets,
     verify_candidates_jaccard,
 )
 from un_datapipeline_spark.tables import load_table
@@ -42,7 +43,8 @@ def test_minhash_exact_dup_recall(spark, sf_t2):
     )
     # Verification stage keeps every exact clone at jaccard exactly 1.0.
     verified = {
-        (r.a, r.b): r.jaccard for r in verify_candidates_jaccard(d, cand_df).collect()
+        (r.a, r.b): r.jaccard
+        for r in verify_candidates_jaccard(cand_df, shingle_sets(d)).collect()
     }
     for pair in expected:
         assert verified.get(pair) == 1.0, f"clone pair {pair} lost in verification"
@@ -61,10 +63,7 @@ def test_signatures_from_sets_match_aggregate_path(spark, sf_smoke):
     llm_dedup_near_minhash / llm_neardup_cluster now run) must be
     value-identical to the original exploded-aggregate lane for every
     doc and every hash index — same elements, same xxhash64, same min."""
-    from un_datapipeline_spark.operators.llm_text import (
-        _signatures_from_sets,
-        shingle_sets,
-    )
+    from un_datapipeline_spark.operators.llm_text import _signatures_from_sets
 
     d = load_table(spark, sf_smoke, "documents")
     via_agg = {r["doc_id"]: tuple(r)[1:] for r in minhash_signatures(d).collect()}

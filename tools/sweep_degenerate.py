@@ -48,32 +48,31 @@ op downstream of ingest.  Without the contract, 38 ops diverged
 (Spark ANSI CAST_OVERFLOW on Inf·1e8 snap lanes, DuckDB stddev
 "out of range" on Inf — probed round 8).
 
-A seventh mode (--timewarp, promoted round 9 from
-tools/probe_timewarp_r10.py) stripes decades-out corrupt timestamps
-into ``events.ts`` (pre-1970 negative epochs + 2099 futures) and
-``orders.o_orderdate`` (1968).  The stripe is deliberately DENSE (one
-in three events rows, one in eleven order dates) so the classes trigger
-decisively; a real 100 TB feed carries such rows far more sparsely —
-one per few hundred — but even ONE reproduces both hazards (round-8
-isolation runs).  It exposed two operator classes before the
-``valid_ts`` contract (tables.py): grid/spine generators materializing
-a 150-year spine off ONE outlier row (task-OOM at cluster scale), and
-watermark ops whose monotonic event-time state silently dropped every
-honest row behind one far-future event (stream_dedup lost 47/210).
-Full-registry fail=0 since the round-9 second wave.
+A seventh mode (--timewarp, promoted round 9) stripes decades-out
+corrupt timestamps into ``events.ts`` (pre-1970 negative epochs + 2099
+futures) and ``orders.o_orderdate`` (1968).  The stripe is deliberately
+DENSE (one in three events rows, one in eleven order dates) so the
+classes trigger decisively; a real 100 TB feed carries such rows far
+more sparsely — one per few hundred — but even ONE reproduces both
+hazards (round-8 isolation runs).  It exposed two operator classes
+before the ``valid_ts`` contract (tables.py): grid/spine generators
+materializing a 150-year spine off ONE outlier row (task-OOM at cluster
+scale), and watermark ops whose monotonic event-time state silently
+dropped every honest row behind one far-future event (stream_dedup lost
+47/210).  Full-registry fail=0 since the round-9 second wave.
 
-An eighth mode (--magnitude, promoted round 10 from
-tools/probe_magnitude_r10.py; corpus rebuilt round 11 for the raised
-bound) stripes FINITE but absurd magnitudes into ``events.value`` —
-the unit-bug / mis-parsed-id shape the --nonfinite contract does not
-catch.  44 ops crashed before the round-10 ingest-contract extension;
-round 11 raised the void bound 1e12 → 9e15 (ADVICE r10: the old bound
-wholesale-mismatched any legitimately-large graded value) so the
-corpus now ALSO stripes surviving large values (±1e13, ±9e15 boundary
-rows) to pin the exact-cents / 128-bit-accumulator lanes that make
-them order-independent (tables.cents_sum / cents2_sum).  1e-300 is
-deliberately kept by the contract (tiny rounds to 0 cents like 0.001
-does) and rides along here to pin that.
+An eighth mode (--magnitude, promoted round 10; corpus rebuilt round 11
+for the raised bound) stripes FINITE but absurd magnitudes into
+``events.value`` — the unit-bug / mis-parsed-id shape the --nonfinite
+contract does not catch.  44 ops crashed before the round-10
+ingest-contract extension; round 11 raised the void bound 1e12 → 9e15
+(ADVICE r10: the old bound wholesale-mismatched any legitimately-large
+graded value) so the corpus now ALSO stripes surviving large values
+(±1e13, ±9e15 boundary rows) to pin the exact-cents /
+128-bit-accumulator lanes that make them order-independent
+(tables.cents_sum / cents2_sum).  1e-300 is deliberately kept by the
+contract (tiny rounds to 0 cents like 0.001 does) and rides along here
+to pin that.
 
 A fifteenth mode (--skew, round 11 — VERDICT r10 item 2) manufactures
 the three canonical hot keys of a 100 TB feed: one user owning 50% of
@@ -82,11 +81,11 @@ exact-duplicate document+embedding cluster (one hot LSH bucket).
 Parity gate here; the per-op WALL-TIME straggler catalog is
 tools/probe_skew_r11.py (subprocess-per-op, the bigdoc pattern).
 
-A fourteenth mode (--mixdim, promoted round 10 from
-tools/probe_mixdim_r10.py) mixes 32- and 72-dim vectors into the 64-dim
-embeddings table — the model-version-mix shape; the EMBED_DIM dimension
-layer of the vector-validity contract excludes off-width vectors on
-both engines (10 of 16 vector ops crashed before it).
+A fourteenth mode (--mixdim, promoted round 10) mixes 32- and 72-dim
+vectors into the 64-dim embeddings table — the model-version-mix shape;
+the EMBED_DIM dimension layer of the vector-validity contract excludes
+off-width vectors on both engines (10 of 16 vector ops crashed before
+it).
 
 Twelfth and thirteenth modes (round 10): --bigdoc splices ~130 KB and
 ~520 KB documents into the corpus (PARITY check of the bounded-prefix
@@ -96,35 +95,33 @@ stripes embedded newlines / CRLF / quotes / tabs / NUL bytes into
 documents.text (serialization boundaries; src_text_lines' typed
 ContractViolation fail-fast counts as a contracted pass).
 
-An eleventh mode (--badjson, promoted round 10 from
-tools/probe_badjson_r10.py) stripes real-feed JSON corruption into
-``events.props`` (truncated objects, bare text, empty strings, null
-literals, wrong types, duplicate keys).  4 ops failed before the
-json_usable/try_parse_json guards — including the quarantine op
-crashing on exactly the rows it exists to quarantine.
+An eleventh mode (--badjson, promoted round 10) stripes real-feed JSON
+corruption into ``events.props`` (truncated objects, bare text, empty
+strings, null literals, wrong types, duplicate keys).  4 ops failed
+before the json_usable/try_parse_json guards — including the quarantine
+op crashing on exactly the rows it exists to quarantine.
 
-A tenth mode (--empty, promoted round 10 from tools/probe_empty_r10.py)
-writes events/documents/embeddings as 0-row parquet with the shipped
-schemas — the day-one shape of every scheduled pipeline.  9 ops failed
-before the round-10 wave (explicit read-back schemas, count_if for
-match counters, 0-row short-circuits for driver-side sample/fit, a
-TIMESTAMP relabel for the 0-row DATE dtype).
+A tenth mode (--empty, promoted round 10) writes
+events/documents/embeddings as 0-row parquet with the shipped schemas —
+the day-one shape of every scheduled pipeline.  9 ops failed before the
+round-10 wave (explicit read-back schemas, count_if for match counters,
+0-row short-circuits for driver-side sample/fit, a TIMESTAMP relabel
+for the 0-row DATE dtype).
 
-A ninth mode (--dupkeys, promoted round 10 from
-tools/probe_dupkeys_r10.py) replays surrogate keys with differing
-payloads (1/10 event_ids, 1/7 doc_ids, 1/8 vec_ids) — at-least-once
-delivery / re-crawl / re-embed.  14 ops failed before the
+A ninth mode (--dupkeys, promoted round 10) replays surrogate keys with
+differing payloads (1/10 event_ids, 1/7 doc_ids, 1/8 vec_ids) —
+at-least-once delivery / re-crawl / re-embed.  14 ops failed before the
 deterministic-per-key-winner contract (tables.winner_document /
 winner_embedding / latest_event), two of them SILENT wrong answers
 (Jaccard 1.878, containment 2.0 — values the metrics can never take).
 
-A sixth mode (--nulls, promoted round 9 from tools/probe_nulls_r09.py)
-stripes NULLs into every nullable non-key column — the shape a real
-100 TB feed always carries.  It found 45 divergent/crashing ops in
-round 8 (catalog: R09_NULLS_PLAN.md); the round-9 class fixes (NULL
-vectors excluded from similarity semantics, NULL-text writer/digest
-contracts, NULLS LAST window pins, None-total UDF bodies) brought it
-to fail=0 and this mode keeps them pinned.
+A sixth mode (--nulls, promoted round 9) stripes NULLs into every
+nullable non-key column — the shape a real 100 TB feed always
+carries.  It found 45 divergent/crashing ops in round 8 (catalog:
+R09_NULLS_PLAN.md); the round-9 class fixes (NULL vectors excluded from
+similarity semantics, NULL-text writer/digest contracts, NULLS LAST
+window pins, None-total UDF bodies) brought it to fail=0 and this mode
+keeps them pinned.
 
 Usage:
     python tools/sweep_degenerate.py            # all operators
@@ -412,8 +409,8 @@ def build_nonfinite_dataset(d: str) -> None:
 
 
 def build_magnitude_dataset(d: str) -> None:
-    """Absurd-magnitude corpus (--magnitude, promoted round 10 from
-    tools/probe_magnitude_r10.py; rebuilt round 11 for the raised 9e15
+    """Absurd-magnitude corpus (--magnitude, promoted round 10;
+    rebuilt round 11 for the raised 9e15
     ingest bound, ADVICE r10): events.value striped with FINITE but
     non-physical magnitudes in BOTH contract regimes —
 
@@ -594,8 +591,8 @@ def build_skew_dataset(d: str) -> None:
 
 
 def build_badjson_dataset(d: str) -> None:
-    """Malformed-JSON corpus (--badjson, promoted round 10 from
-    tools/probe_badjson_r10.py after the fix wave): ``events.props``
+    """Malformed-JSON corpus (--badjson, promoted round 10
+    after the fix wave): ``events.props``
     striped (1/7 rows) with real-feed corruption — truncated objects,
     bare non-JSON text, empty strings, ``null`` literals, wrong-type
     payloads, duplicate-key objects.  Spark's JSON surfaces NULL
@@ -642,7 +639,7 @@ def build_badjson_dataset(d: str) -> None:
 
 def build_mixdim_dataset(d: str) -> None:
     """Mixed-embedding-dimension corpus (--mixdim, promoted round 10
-    from tools/probe_mixdim_r10.py after the EMBED_DIM contract): ~1/9
+    after the EMBED_DIM contract): ~1/9
     embedding rows truncated to 32 dims, ~1/17 padded to 72 — the
     model-version mix every production embedding table accumulates (a
     re-embed job lands different-width rows; list<float> is unbounded).
@@ -716,8 +713,8 @@ def build_bigdoc_dataset(d: str) -> None:
 
 
 def build_ctrlchars_dataset(d: str) -> None:
-    """Control-character corpus (--ctrlchars, promoted round 10 from
-    tools/probe_ctrlchars_r10.py): documents.text striped with embedded
+    """Control-character corpus (--ctrlchars, promoted round 10):
+    documents.text striped with embedded
     newlines, CRLF, quotes+commas, tabs, NUL bytes, and literal
     backslash-n — serialization-boundary stress for the text/CSV
     writers.  src_text_lines raises its typed ContractViolation here
@@ -756,8 +753,8 @@ def build_ctrlchars_dataset(d: str) -> None:
 
 
 def build_empty_dataset(d: str) -> None:
-    """Zero-row corpus (--empty, promoted round 10 from
-    tools/probe_empty_r10.py after the fix wave): events, documents and
+    """Zero-row corpus (--empty, promoted round 10
+    after the fix wave): events, documents and
     embeddings written as 0-row parquet with the exact shipped schemas
     (pyarrow ``schema.empty_table()``); relational tables intact.  The
     day-one shape of every scheduled pipeline — a new partition/tenant
@@ -775,8 +772,8 @@ def build_empty_dataset(d: str) -> None:
 
 
 def build_dupkeys_dataset(d: str) -> None:
-    """Duplicate-surrogate-key corpus (--dupkeys, promoted round 10 from
-    tools/probe_dupkeys_r10.py after the deterministic-winner wave):
+    """Duplicate-surrogate-key corpus (--dupkeys, promoted round 10
+    after the deterministic-winner wave):
     1/10 event_ids replayed (shifted ts, different value/event_type),
     1/7 doc_ids re-crawled (different text), 1/8 vec_ids re-embedded
     (different vector) — the at-least-once-delivery shape every real
@@ -829,8 +826,8 @@ def build_dupkeys_dataset(d: str) -> None:
 
 
 def build_nulls_dataset(d: str) -> None:
-    """NULL-bulk corpus (--nulls, promoted from tools/probe_nulls_r09.py
-    after the round-9 fix wave): NULLs striped into every nullable
+    """NULL-bulk corpus (--nulls, promoted after the
+    round-9 fix wave): NULLs striped into every nullable
     non-key column — NULL text/lang/source, NULL value/props/event_type,
     NULL o_totalprice/o_orderpriority, NULL l_discount/l_tax/
     l_returnflag, whole-NULL embeddings AND element-level NULLs inside
@@ -922,8 +919,8 @@ def build_nulls_dataset(d: str) -> None:
 
 
 def build_orphans_dataset(d: str) -> None:
-    """Referential-violation corpus (--orphans, promoted round 12 from
-    tools/probe_orphans_r12.py): dangling foreign keys striped into the
+    """Referential-violation corpus (--orphans, promoted round 12):
+    dangling foreign keys striped into the
     three fact->dim edges — the single most common real-feed corruption
     after NULLs (deleted accounts, GDPR erasure, partial ingestion,
     cross-system id spaces):
@@ -983,8 +980,8 @@ def build_orphans_dataset(d: str) -> None:
 
 
 def build_timewarp_dataset(d: str) -> None:
-    """Decades-out-timestamp corpus (--timewarp, promoted from
-    tools/probe_timewarp_r10.py after the round-9 second-wave fixes):
+    """Decades-out-timestamp corpus (--timewarp, promoted after the
+    round-9 second-wave fixes):
     events.ts striped with pre-1970 negative epochs (1969-12-31 23:45,
     1950) and far-future stamps (2099); orders.o_orderdate striped with
     1968.  The stripe is deliberately dense (1/3 of events rows, 1/11
@@ -1091,9 +1088,9 @@ def build_tiny_dataset(d: str) -> None:
 def run_registry(d: str, only: set[str], app_name: str = "degen-sweep"):
     """Run every registered op on the corpus at ``d`` through the
     driver-mirror strict compare on both engines; returns
-    (n_ok, n_rows_only, fails).  The ONE harness loop — the corpus
-    probes (tools/probe_nulls_r09.py) reuse it instead of forking a
-    copy that would drift (round-8 review catch)."""
+    (n_ok, n_rows_only, fails).  The ONE harness loop — every corpus
+    mode runs through it instead of forking a copy that would drift
+    (round-8 review catch)."""
     from pyspark.sql import SparkSession
 
     from tests.strict_diff import canon, strict_compare

@@ -18,7 +18,11 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.operators.dedup_extras import trigram_array
+from un_datapipeline_spark.operators.dedup_extras import (
+    doc_trigrams,
+    jaccard,
+    overlap_pairs,
+)
 from un_datapipeline_spark.session import ckpt, pinned_shuffle_width
 from un_datapipeline_spark.tables import (
     capped_text_sql,
@@ -422,40 +426,25 @@ FROM labeled GROUP BY rep
 
 def _dup_edges(d: DataFrame) -> DataFrame:
     """Undirected dup edges (a < b): exact (md5-equal) ∪ word-3-gram
-    Jaccard ≥ 0.5.  The gram-equality join is vocabulary-keyed (meets
-    only docs sharing a trigram) — the same sub-quadratic shape as
-    llm_dedup_ngram_jaccard, here without the probe bound because
-    clustering needs the full edge set.  The gram SIGNATURES are
-    prefix-capped (bounded-prefix contract, tables.capped_text) — the
-    exact-md5 edge lane stays whole-document."""
-    from un_datapipeline_spark.scale import parallelize_scan
-    from un_datapipeline_spark.tables import capped_text
+    Jaccard ≥ 0.5, the Jaccard lane through dedup_extras' gram-overlap
+    kernel without the probe bound, because clustering needs the full
+    edge set.  The gram SIGNATURES are prefix-capped (bounded-prefix
+    contract, tables.capped_text) — the exact-md5 edge lane stays
+    whole-document.
 
-    toks = F.split(capped_text(), " ")
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
+    Scale hazard: unlike llm_dedup_ngram_jaccard this lane has NO
+    MAX_GRAM_DF cap (its oracle has none, so capping would change the
+    edges), so a hub gram with document frequency df puts df² rows into
+    one join bucket — quadratic in the hub's df, not sub-quadratic."""
+    from un_datapipeline_spark.scale import parallelize_scan
+
     # Round-13 (guide §2.5): the gram build+explode is the expensive
     # per-row stage and sits directly above a structurally ONE-task scan
     # (single-row-group test file) — and it is re-evaluated by three
     # consumers (sizes + both self-join sides).  parallelize_scan
     # spreads every evaluation; no-op when the scan parallelizes.
-    d_grams = parallelize_scan(d.select("doc_id", "text"))
-    grams = d_grams.select(
-        "doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram")
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        grams.alias("x")
-        .join(grams.alias("y"), F.expr("x.gram = y.gram AND x.doc_id < y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("shared"))
-    jedges = (
-        inter.join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("b") == F.col("sb.doc_id"))
-        .filter(jac >= 0.5)
-        .select("a", "b")
-    )
+    grams = doc_trigrams(parallelize_scan(d.select("doc_id", "text")))
+    jedges = overlap_pairs(grams, "gram").filter(jaccard() >= 0.5).select("a", "b")
     hashes = d.select("doc_id", F.md5("text").alias("h"))
     medges = (
         hashes.alias("x")
@@ -1111,7 +1100,8 @@ def llm_canonical_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id — and count what gets dropped.  This is the keep-policy
     RefinedWeb/C4-style pipelines apply after clustering.
 
-    Scale shape: reuses the sub-quadratic edge builder and the
+    Scale shape: reuses the edge builder (_dup_edges, whose uncapped
+    gram lane is quadratic in a hub gram's df) and the
     iterative min-label components (see llm_dedup_cluster); the
     selection itself is one window over cluster-sized partitions.  The
     SQL oracle replays the whole chain with a recursive CTE."""

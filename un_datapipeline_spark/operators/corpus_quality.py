@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from un_datapipeline_spark.registry import register
-from un_datapipeline_spark.operators.dedup_extras import ngram_array, trigram_array
+from un_datapipeline_spark.operators.dedup_extras import doc_trigrams, ngram_array
 from un_datapipeline_spark.tables import (
     capped_text,
     capped_text_sql,
@@ -813,10 +813,7 @@ def llm_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-crawled doc_id would union two texts' gram sets (probed: n_grams
     45 vs 24) — the deterministic per-key winner (tables.
     winner_document, oracle-mirrored) restores one-set-per-id."""
-    d = winner_document(load_table(spark, sf_dir, "documents"))
-    toks = F.split(capped_text(), " ")  # bounded-prefix signature contract
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
-    grams = d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
+    grams = doc_trigrams(winner_document(load_table(spark, sf_dir, "documents")))
     first_seen = grams.groupBy("gram").agg(F.min("doc_id").alias("first_doc"))
     return (
         grams.join(first_seen, "gram")

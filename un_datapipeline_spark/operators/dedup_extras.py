@@ -75,6 +75,83 @@ def trigram_array(toks):
 # near-dup signal anyway (C4/Gopher drop them for quality reasons too).
 MAX_GRAM_DF = 100
 
+
+# --------------------------------------------------------------------------
+# Gram-overlap kernel: the one place the word-trigram dedup family
+# (jaccard, containment, incremental, the dup-edge builder behind
+# llm_dedup_cluster / llm_canonical_select, the fingerprint containment
+# pairs and ngram novelty) builds its gram rows, caps hub keys and
+# counts shared keys per document pair.
+# --------------------------------------------------------------------------
+
+def doc_trigrams(d: DataFrame) -> DataFrame:
+    """(doc_id, gram): each document's distinct word trigrams over the
+    bounded signature prefix (tables.capped_text), built linearly by
+    :func:`trigram_array`."""
+    grams_arr = trigram_array(F.split(capped_text(), " "))
+    return d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
+
+
+def drop_hot(rows: DataFrame, key: str) -> DataFrame:
+    """``rows`` without the ``key`` values whose document frequency is
+    above MAX_GRAM_DF (see above), materialized once.
+
+    The hot-key set is tiny by construction (a vocabulary-bounded
+    aggregate with map-side combine; only keys clearing the cap
+    survive), so the filter is a broadcast anti-join and the fact-side
+    stream never shuffles on a hot key.  The capped stream feeds the
+    sizes and both join sides; materializing it keeps the explode ->
+    hot-key -> anti-join pipeline to one execution, DISK_ONLY because
+    it is data-sized (SCALING.md storage discipline)."""
+    hot = (
+        rows.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > MAX_GRAM_DF)
+        .select(key)
+    )
+    return rows.join(F.broadcast(hot), key, "left_anti").transform(
+        ckpt(storage_level=StorageLevel.DISK_ONLY)
+    )
+
+
+def pair_counts(
+    g: DataFrame, key: str, left=None, right=None, ordered: bool = True
+) -> DataFrame:
+    """(a, b, shared): the number of ``key`` values documents a and b
+    share, by a key-equality self-join of the (doc_id, key) rows ``g``.
+    The join only meets rows sharing a key, so its buckets are as large
+    as the key's document frequency squared.  ``left``/``right`` filter
+    the a/b sides; ``ordered`` keeps each unordered pair once (a < b)."""
+    x = g.alias("x") if left is None else g.alias("x").filter(left)
+    y = g.alias("y") if right is None else g.alias("y").filter(right)
+    on = f"x.{key} = y.{key}" + (" AND x.doc_id < y.doc_id" if ordered else "")
+    return (
+        x.join(y, F.expr(on))
+        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+
+
+def overlap_pairs(
+    g: DataFrame, key: str, left=None, right=None, ordered: bool = True
+) -> DataFrame:
+    """(a, b, shared, n_a, n_b): :func:`pair_counts` joined with both
+    documents' set sizes, so callers score any set-overlap measure
+    (Jaccard, containment) from one row."""
+    sizes = g.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        pair_counts(g, key, left, right, ordered)
+        .join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
+        .join(sizes.alias("sb"), F.col("b") == F.col("sb.doc_id"))
+        .select("a", "b", "shared", F.col("sa.n").alias("n_a"), F.col("sb.n").alias("n_b"))
+    )
+
+
+def jaccard():
+    """Set Jaccard of an :func:`overlap_pairs` row."""
+    return F.col("shared").cast("double") / (F.col("n_a") + F.col("n_b") - F.col("shared"))
+
+
 _JACCARD_ORACLE = f"""
 WITH grams AS (
   SELECT DISTINCT doc_id, gram FROM (
@@ -112,14 +189,10 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing a gram — shuffle keyed by gram, the classic verification
     stage downstream of MinHash candidates.
 
-    Skew guard (round-3 verdict item 5): grams with document frequency
-    > MAX_GRAM_DF are dropped on BOTH sides (Spark and oracle) before
-    the join, so no shuffle bucket can exceed MAX_GRAM_DF² candidate
-    pairs at any corpus size.  The hot-gram set is tiny by construction
-    (vocabulary-bounded groupBy with map-side combine finds it; only
-    grams clearing the cap survive), so it broadcasts and the filter is
-    a broadcast anti-join — the fact-side gram stream never shuffles on
-    a hot key.  Jaccard sizes are computed over the same capped gram
+    Skew guard (round-3 verdict item 5): hub grams are dropped on BOTH
+    sides (Spark by :func:`drop_hot`, and the oracle) before the join,
+    so no shuffle bucket can exceed MAX_GRAM_DF² candidate pairs at any
+    corpus size.  Jaccard sizes are computed over the same capped gram
     sets, keeping the metric internally consistent.
 
     Duplicate-key contract (round 10, R10_DUPKEYS_PLAN class 2): the
@@ -129,38 +202,11 @@ def llm_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key winner (tables.winner_document, mirrored in the oracle)
     restores set semantics; 0 <= jac <= 1 is pytest-pinned."""
     d = winner_document(load_table(spark, sf_dir, "documents"))
-    toks = F.split(capped_text(), " ")  # bounded-prefix signature contract
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
-    grams = (
-        d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
-    )
-    hot = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_GRAM_DF)
-        .select("gram")
-    )
-    # The capped gram stream feeds multiple downstream branches (sizes
-    # and both join sides); materialize it once so the explode -> hot-gram
-    # -> anti-join pipeline executes once, not per branch.
-    # DISK_ONLY: the gram stream is data-sized (SCALING.md storage discipline)
-    gf = grams.join(F.broadcast(hot), "gram", "left_anti").transform(
-        ckpt(storage_level=StorageLevel.DISK_ONLY)
-    )
-    sizes = gf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        gf.alias("x")
-        .filter(F.col("doc_id") < 100)
-        .join(gf.alias("y"), F.expr("x.gram = y.gram AND x.doc_id < y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("shared"))
+    gf = drop_hot(doc_trigrams(d), "gram")
     return (
-        inter.join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("b") == F.col("sb.doc_id"))
-        .filter(jac >= 0.5)
-        .select("a", "b", F.round(jac, 6).alias("jac"))
+        overlap_pairs(gf, "gram", left=F.col("doc_id") < 100)
+        .filter(jaccard() >= 0.5)
+        .select("a", "b", F.round(jaccard(), 6).alias("jac"))
     )
 
 
@@ -436,34 +482,10 @@ def llm_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     texts' gram sets and containment leaves [0,1] (probed: 2.0 — a
     silent wrong answer)."""
     d = winner_document(load_table(spark, sf_dir, "documents"))
-    toks = F.split(capped_text(), " ")  # bounded-prefix signature contract
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
-    grams = d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
-    hot = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_GRAM_DF)
-        .select("gram")
-    )
-    # The capped gram stream feeds multiple downstream branches (sizes
-    # and both join sides); materialize it once so the explode -> hot-gram
-    # -> anti-join pipeline executes once, not per branch.
-    # DISK_ONLY: the gram stream is data-sized (SCALING.md storage discipline)
-    gf = grams.join(F.broadcast(hot), "gram", "left_anti").transform(
-        ckpt(storage_level=StorageLevel.DISK_ONLY)
-    )
-    sizes = gf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        gf.alias("x")
-        .filter(F.col("doc_id") < 100)
-        .join(gf.alias("y"), F.expr("x.gram = y.gram AND x.doc_id < y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("a"), F.col("y.doc_id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    contain = F.col("shared").cast("double") / F.least(F.col("sa.n"), F.col("sb.n"))
+    gf = drop_hot(doc_trigrams(d), "gram")
+    contain = F.col("shared").cast("double") / F.least(F.col("n_a"), F.col("n_b"))
     return (
-        inter.join(sizes.alias("sa"), F.col("a") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("b") == F.col("sb.doc_id"))
+        overlap_pairs(gf, "gram", left=F.col("doc_id") < 100)
         .filter(contain >= 0.6)
         .select("a", "b", F.round(contain, 6).alias("containment"))
     )
@@ -549,40 +571,15 @@ def llm_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # gram SIGNATURE lane is prefix-capped (bounded-prefix contract);
     # the exact lane above stays whole-document md5 by design
-    toks = F.split(capped_text(), " ")
-    grams_arr = trigram_array(toks)  # linear k-gram build (see ngram_array)
-    grams = d.select("doc_id", F.explode(F.array_distinct(grams_arr)).alias("gram"))
-    hot = (
-        grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_GRAM_DF)
-        .select("gram")
-    )
-    # The capped gram stream feeds multiple downstream branches (sizes
-    # and both join sides); materialize it once so the explode -> hot-gram
-    # -> anti-join pipeline executes once, not per branch.
-    # DISK_ONLY: the gram stream is data-sized (SCALING.md storage discipline)
-    gf = grams.join(F.broadcast(hot), "gram", "left_anti").transform(
-        ckpt(storage_level=StorageLevel.DISK_ONLY)
-    )
-    sizes = gf.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    inter = (
-        gf.alias("x")
-        .filter(F.col("doc_id") >= 400)
-        .join(
-            gf.alias("y").filter(F.col("doc_id") < 400),
-            F.expr("x.gram = y.gram"),
-        )
-        .groupBy(F.col("x.doc_id").alias("b_id"), F.col("y.doc_id").alias("base_id"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    jac = F.col("shared").cast("double") / (F.col("sa.n") + F.col("sb.n") - F.col("shared"))
+    gf = drop_hot(doc_trigrams(d), "gram")
     near = (
-        inter.join(sizes.alias("sa"), F.col("b_id") == F.col("sa.doc_id"))
-        .join(sizes.alias("sb"), F.col("base_id") == F.col("sb.doc_id"))
-        .filter(jac >= 0.5)
-        .groupBy(F.col("b_id").alias("doc_id"))
-        .agg(F.min("base_id").alias("near_match"))
+        overlap_pairs(
+            gf, "gram", left=F.col("doc_id") >= 400, right=F.col("doc_id") < 400,
+            ordered=False,
+        )
+        .filter(jaccard() >= 0.5)
+        .groupBy(F.col("a").alias("doc_id"))
+        .agg(F.min("b").alias("near_match"))
     )
     return (
         batch.select("doc_id")

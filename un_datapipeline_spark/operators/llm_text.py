@@ -341,31 +341,23 @@ def lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
 
 
 def verify_candidates_jaccard(
-    d: DataFrame,
-    candidates: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    sets: DataFrame | None = None,
+    candidates: DataFrame, sets: DataFrame, threshold: float = JACCARD_THRESHOLD
 ) -> DataFrame:
-    """Exact char-shingle Jaccard verification of LSH candidate pairs.
+    """Exact char-shingle Jaccard verification of LSH candidate pairs
+    against the per-doc shingle sets of :func:`shingle_sets`.
 
-    Shingle sets are collected per doc (bounded by doc length) and the
-    intersection computed per PAIR with array_intersect — never a
-    gram-equality join, which would blow up on ubiquitous 5-grams like
+    The intersection is computed per PAIR with array_intersect — never
+    a gram-equality join, which would blow up on ubiquitous 5-grams like
     `' the '`.  Cost is O(|candidates| × avg_doc_len), distributed, and
     the candidate set is already sub-quadratic from the banding stage.
-    Pass `sets` (from :func:`shingle_sets`) to reuse a materialized set
-    table instead of re-shingling the corpus (round 12).
     """
-    sh = sets if sets is not None else _shingled(d).groupBy("doc_id").agg(
-        F.collect_set("shingle").alias("sh")
-    )
     return (
         candidates.join(
-            sh.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a")),
+            sets.select(F.col("doc_id").alias("a"), F.col("sh").alias("sh_a")),
             "a",
         )
         .join(
-            sh.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b")),
+            sets.select(F.col("doc_id").alias("b"), F.col("sh").alias("sh_b")),
             "b",
         )
         .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
@@ -382,6 +374,15 @@ def verify_candidates_jaccard(
     )
 
 
+def minhash_near_pairs(d: DataFrame) -> DataFrame:
+    """(a, b, jaccard) verified near-dup pairs: one shingling pass
+    (:func:`shingle_sets`) feeds both the MinHash signatures and the
+    exact verifier, with LSH banding in between."""
+    sets = shingle_sets(d)
+    candidates = lsh_candidate_pairs(_signatures_from_sets(sets))
+    return verify_candidates_jaccard(candidates, sets)
+
+
 @register("llm_dedup_near_minhash", oracle=None, tier="T3")
 def llm_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs via character-shingle MinHash + LSH banding
@@ -391,10 +392,7 @@ def llm_dedup_near_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     (identical texts always collide in every band and verify at
     jaccard = 1.0) is asserted in the unit suite."""
     d = load_table(spark, sf_dir, "documents")
-    # one shingling pass feeds both the signatures and the verifier
-    sets = shingle_sets(d)
-    candidates = lsh_candidate_pairs(_signatures_from_sets(sets))
-    return verify_candidates_jaccard(d, candidates, sets=sets).orderBy("a", "b")
+    return minhash_near_pairs(d).orderBy("a", "b")
 
 
 _ROUGE_ORACLE = """
@@ -496,10 +494,7 @@ def llm_neardup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     signatures); the clone-clustering recall invariant is
     pytest-asserted like the other minhash ops."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # one shingling pass feeds both the signatures and the verifier (r12)
-    sets = shingle_sets(d)
-    cands = lsh_candidate_pairs(_signatures_from_sets(sets))
-    edges = verify_candidates_jaccard(d, cands, sets=sets).select("a", "b")
+    edges = minhash_near_pairs(d).select("a", "b")
     from un_datapipeline_spark.operators.advanced import connected_components
 
     labels = connected_components(edges)

@@ -263,8 +263,8 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Watermark-poisoning guard: the watermark is MONOTONIC state — one
     far-future corrupt event advances it past every honest row and the
-    stateful dedup silently DROPS them (tools/probe_timewarp_r10
-    measured 47 of 210 rows lost to a single 2099 stripe).  ``valid_ts``
+    stateful dedup silently DROPS them (the `sweep_degenerate.py --timewarp`
+    corpus: measured 47 of 210 rows lost to a single 2099 stripe).  ``valid_ts``
     rejects out-of-window event times before they can poison the
     watermark, mirrored in the oracle (tables.py documents the
     contract); bitwise-neutral on clean feeds."""
@@ -350,7 +350,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Watermark-poisoning guard (same class as stream_dedup): both legs'
     watermarks are monotonic, so one far-future corrupt event evicts
-    every honest row from the join state (tools/probe_timewarp_r10
+    every honest row from the join state (`sweep_degenerate.py --timewarp` corpus:
     measured 20 of 51 distinct clicks surviving a single 2099 stripe).
     ``valid_ts`` rejects out-of-window event times on both legs,
     mirrored in the oracle (contract: tables.py)."""
